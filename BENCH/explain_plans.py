@@ -108,6 +108,19 @@ def main():
     # r4: the page census rides the persisted parse (outer explode +
     # left sitelink join), so lineage must not open the pages table a
     # second time — every parquet scan in its plan sits BEHIND a cache
+    # constant tables (template map, constraints, dispatch) must be
+    # LocalRelations: a list-built createDataFrame plans as a LogicalRDD
+    # over a PythonRDD and re-runs Python workers on every scan. The
+    # inputs here are parquet, so every RDD leaf is the pipeline's own.
+    # Counts logical leaves plus the "Scan ExistingRDD" nodes an
+    # InMemoryRelation prints for its cached subtree
+    def rdd_leaves(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sum(1 for ln in plan.splitlines()
+                   if "LogicalRDD" in ln or "ExistingRDD" in ln)
+    n_rdd = rdd_leaves(out["triples"]) + rdd_leaves(out["lineage"])
+    check("KG constant tables are LocalRelations: 0 LogicalRDD leaves",
+          n_rdd == 0, f"{n_rdd} LogicalRDD/ExistingRDD leaves in triples+lineage")
     check("lineage is one pass: no pages scan outside the parse cache",
           "Scan parquet" not in lineage_plan.split("InMemoryRelation")[0],
           "census + metrics both read InMemoryTableScan")
@@ -178,8 +191,12 @@ def main():
     # would mean a real shuffle crept in (the measured 19 s
     # explode->groupBy first cut of repetition would fail this).
     def row_local_ok(plan):
+        # the partitioning is the first word of the Arguments line of
+        # each "(n) Exchange" node-detail block — never any other
+        # node's Arguments line
         import re
-        ex_args = re.findall(r"Arguments: (\w+)", plan)
+        ex_args = re.findall(r"^\(\d+\) Exchange\n(?:.+\n)*?Arguments: (\w+)",
+                             plan, re.M)
         bad = [a for a in ex_args
                if a in ("hashpartitioning", "rangepartitioning",
                         "SinglePartition")]

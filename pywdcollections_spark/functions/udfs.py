@@ -1,4 +1,8 @@
-"""Arrow-vectorized pandas UDFs — the engine's only Python crossings.
+"""Arrow-vectorized pandas UDFs: the KG pipeline's Python crossings
+(extract/parse, coordinate and URL coercion, wikilink mentions). They
+are not the engine's only ones — operators/multimodal.py runs its own
+``mapInPandas`` stages — and constant tables must not add any: build
+them with ``localtable.local_table``, never ``createDataFrame(<list>)``.
 
 Every UDF here wraps a pure function from functions/* and is
 Series->Series (Arrow batches, no per-row Python at the Spark

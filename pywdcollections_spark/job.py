@@ -146,7 +146,7 @@ def main(argv: list[str] | None = None) -> dict:
         from pyspark.errors import AnalysisException
         from pywdcollections_spark.operators.promote import promote_to_entities
         from pywdcollections_spark.plans.sync import changed_entity_rows
-        from pywdcollections_spark.sources.sinks import ParquetUpsertSink
+        from pywdcollections_spark.sources.sinks import ParquetUpsertSink, path_not_found
         entities_path = os.path.join(args.out, "entities")
         sink = ParquetUpsertSink(spark, entities_path)
         # explicit first-run test (ADVICE r4/r5): probe through the
@@ -158,9 +158,7 @@ def main(argv: list[str] | None = None) -> dict:
         try:
             current = sink.read()
         except AnalysisException as e:
-            cond = (getattr(e, "getCondition", None)
-                    or getattr(e, "getErrorClass"))()
-            if cond != "PATH_NOT_FOUND":
+            if not path_not_found(e):
                 raise
             # first run: seed the table
             current = dims["entities_seed"]

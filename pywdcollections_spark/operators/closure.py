@@ -13,14 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pywdcollections_spark.localtable import local_table
+
 
 def descendants(class_edges: DataFrame, roots: list[int],
                 max_iters: int = 32) -> DataFrame:
     """All classes reachable from ``roots`` via sub->super edges
     reversed (i.e. every subclass, transitively, plus the roots).
     class_edges: (sub_qid long, super_qid long)."""
-    spark = class_edges.sparkSession
-    reach = spark.createDataFrame([(r,) for r in roots], "cls long")
+    reach = local_table(class_edges.sparkSession, [(r,) for r in roots], "cls long")
     frontier = reach
     for i in range(max_iters):
         step = (frontier.join(class_edges,

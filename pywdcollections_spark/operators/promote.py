@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pywdcollections_spark.localtable import local_table
+
 
 def winners_per_subject_pred(valid_triples: DataFrame) -> DataFrame:
     """One obj_norm per (subj, pred): deterministic first-writer."""
@@ -52,8 +54,8 @@ def labels_with_fallback(texts: DataFrame, languages: list[str]) -> DataFrame:
     """(qid, lang, label, description) incl. 'mul' rows -> one row per
     (qid, requested lang) with label/description falling back
     lang -> mul -> '' (pywdcollections.py:186-187,429-431)."""
-    langs = texts.sparkSession.createDataFrame([(l,) for l in sorted(languages)],
-                                               "lang string")
+    langs = local_table(texts.sparkSession, [(l,) for l in sorted(languages)],
+                        "lang string")
     base = texts.select("qid").distinct().crossJoin(langs)
     own = texts.select("qid", "lang", F.col("label").alias("l_own"),
                        F.col("description").alias("d_own"))

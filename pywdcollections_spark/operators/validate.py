@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pywdcollections_spark import registry
 from pywdcollections_spark.functions.udfs import (
     coord_parse_udf, int_parse_ok_udf, url_normalize_udf)
+from pywdcollections_spark.localtable import local_table
 
 _SPECIFIC_WRITERS = {281, 373, 625, 856, 1047, 1866, 6788, 8389}
 
@@ -107,8 +108,8 @@ def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFram
              file_redirects: DataFrame | None = None) -> DataFrame:
     """-> staged columns + family, valid, reject_reason, obj_norm."""
     b = lambda df: df  # AQE auto-broadcasts dims (see linking.py note)
-    disp = b(spark.createDataFrame(
-        dispatch_rows(),
+    disp = b(local_table(
+        spark, dispatch_rows(),
         "pred string, family string, constraints array<long>, "
         "min_len int, max_len int, exact_len int"))
 

@@ -22,11 +22,14 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import CollectionConfig
+from pywdcollections_spark.localtable import local_table
 from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
+from pywdcollections_spark.sources.sinks import path_not_found
 
 
 def bucket_col(col, n_buckets: int):
@@ -34,12 +37,20 @@ def bucket_col(col, n_buckets: int):
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
+    """Buckets with a committed lineage row. Only a missing lineage
+    directory means "nothing done yet"; any other read error (a corrupt
+    or unreadable lineage file) propagates — treating it as empty would
+    re-run every bucket over committed data. The explicit schema makes
+    a lineage directory with no committed file (a kill inside the first
+    lineage write) read as empty rather than fail schema inference."""
     lineage_path = os.path.join(out_dir, "lineage")
     try:
-        return [r["bucket"] for r in
-                spark.read.parquet(lineage_path).select("bucket").distinct().collect()]
-    except Exception:
+        lin = spark.read.schema("bucket long").parquet(lineage_path)
+    except AnalysisException as e:
+        if not path_not_found(e):
+            raise
         return []
+    return [r["bucket"] for r in lin.distinct().collect()]
 
 
 def _write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
@@ -90,6 +101,23 @@ def _stage_input(spark: SparkSession, pages_b: DataFrame, out_dir: str,
         (pages_b.repartition(n_buckets, F.col("bucket"))
          .write.mode("overwrite").partitionBy("bucket").parquet(staging))
     return spark.read.parquet(staging)
+
+
+def group_lineage(spark: SparkSession, todo: list[int],
+                  lineage: DataFrame) -> DataFrame:
+    """The lineage rows one commit group appends. EVERY bucket in
+    ``todo`` gets a row — including zero-page buckets, which would
+    otherwise be retried forever. The census comes from build_kg's own
+    lineage frame (bucketed on the run's n_buckets via
+    lineage_buckets): n_pages = distinct (url, warc_ts) snapshots — the
+    page identity all lineage forms share (ADVICE r4) — counted from
+    the persisted parse pass, so the pages table is not re-scanned per
+    group."""
+    todo_df = local_table(spark, [(b,) for b in todo], "bucket long")
+    return (todo_df
+            .join(lineage.select("bucket", "n_pages", "n_triples"), "bucket", "left")
+            .fillna(0, ["n_pages", "n_triples"])
+            .withColumn("completed_at", F.current_timestamp()))
 
 
 def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
@@ -164,20 +192,9 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
         if fail_before_lineage is not None and processed == fail_before_lineage:
             raise RuntimeError("simulated kill inside data->lineage window")
         # lineage rows commit last: a bucket is "done" only after its
-        # data lands. EVERY bucket in todo gets a row — including
-        # zero-page buckets, which would otherwise be retried forever.
-        # The census comes from build_kg's own lineage frame (bucketed
-        # on THIS n_buckets via lineage_buckets): n_pages = distinct
-        # (url, warc_ts) snapshots — the page identity all lineage
-        # forms share (ADVICE r4) — counted from the persisted parse
-        # pass, so the pages table is not re-scanned per group
-        todo_df = spark.createDataFrame([(b,) for b in todo], "bucket long")
-        lin = (todo_df
-               .join(out["lineage"].select("bucket", "n_pages", "n_triples"),
-                     "bucket", "left")
-               .fillna(0, ["n_pages", "n_triples"])
-               .withColumn("completed_at", F.current_timestamp()))
-        lin.write.mode("append").parquet(os.path.join(out_dir, "lineage"))
+        # data lands
+        (group_lineage(spark, todo, out["lineage"])
+         .write.mode("append").parquet(os.path.join(out_dir, "lineage")))
         # this group's outputs are all committed: release the pipeline
         # persists so per-group DISK_ONLY caches don't accumulate for
         # the life of a long multi-group session

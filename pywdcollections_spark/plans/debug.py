@@ -25,7 +25,7 @@ from pywdcollections_spark.operators import linking as L
 from pywdcollections_spark.operators import mapping as M
 from pywdcollections_spark.operators import parse as P
 from pywdcollections_spark.operators import validate as V
-from pywdcollections_spark.plans.pipeline import prop_constraints_df
+from pywdcollections_spark.plans.pipeline import prop_constraints_df, template_map_df
 
 
 def debug_page(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
@@ -56,11 +56,8 @@ def debug_page(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     templates = P.resolve_subjects(templates, dims["sitelinks"])
     out["templates"] = templates.collect()
 
-    template_map = spark.createDataFrame(
-        config.template_map_rows(),
-        "site string, template_lc string, param_lc string, "
-        "prop_key string, pred string, datatype string")
-    cands = M.map_parameters(templates, template_map, dims["template_redirects"])
+    cands = M.map_parameters(templates, template_map_df(spark, config),
+                             dims["template_redirects"])
     out["candidates"] = cands.collect()
 
     linked = L.link_entity_values(

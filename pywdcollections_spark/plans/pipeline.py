@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from pywdcollections_spark.config import CollectionConfig
+from pywdcollections_spark.localtable import local_table
 from pywdcollections_spark.operators import canonicalize as C
 from pywdcollections_spark.operators import linking as L
 from pywdcollections_spark.operators import mapping as M
@@ -26,30 +27,18 @@ from pywdcollections_spark.operators import validate as V
 from pywdcollections_spark.registry import PROP_SPECS
 
 
-class _LazyOut(dict):
-    """build_kg's result dict with deferred entries: ``lazy(key, fn)``
-    registers a thunk evaluated (once) on first ``[key]`` access.
-    Plain dict otherwise — iteration/``in``/``get`` see the key."""
-
-    def __init__(self, *a, **kw):
-        super().__init__(*a, **kw)
-        self._thunks: dict = {}
-
-    def lazy(self, key, fn) -> None:
-        self._thunks[key] = fn
-        super().__setitem__(key, None)
-
-    def __getitem__(self, key):
-        fn = self._thunks.pop(key, None)
-        if fn is not None:
-            super().__setitem__(key, fn())
-        return super().__getitem__(key)
-
-
 def prop_constraints_df(spark: SparkSession) -> DataFrame:
     rows = [{"pred": f"P{s.pid}", "constraints": [int(c) for c in s.constraints]}
             for s in PROP_SPECS.values()]
-    return spark.createDataFrame(rows, "pred string, constraints array<long>")
+    return local_table(spark, rows, "pred string, constraints array<long>")
+
+
+def template_map_df(spark: SparkSession, config: CollectionConfig) -> DataFrame:
+    """The config's template -> property map (``template_map_rows``) as
+    the mapping stage's broadcast-join side."""
+    return local_table(spark, config.template_map_rows(),
+                       "site string, template_lc string, param_lc string, "
+                       "prop_key string, pred string, datatype string")
 
 
 def harvest(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
@@ -86,11 +75,6 @@ def harvest(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     the mapping stage filters the census rows back out, leaving staged
     output byte-identical.
     """
-    template_map = spark.createDataFrame(
-        config.template_map_rows(),
-        "site string, template_lc string, param_lc string, "
-        "prop_key string, pred string, datatype string")
-
     census = templates_out is not None
     templates = P.extract_and_parse(pages, n_partitions=n_partitions,
                                     use_html=use_html,
@@ -110,7 +94,8 @@ def harvest(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
         # recover the inner-join / inner-explode semantics exactly
         templates = templates.filter(F.col("tname").isNotNull()
                                      & F.col("qid").isNotNull())
-    cands = M.map_parameters(templates, template_map, dims["template_redirects"])
+    cands = M.map_parameters(templates, template_map_df(spark, config),
+                             dims["template_redirects"])
     if persist:
         # cands is flat strings/ints (no arrays): the in-memory columnar
         # cache is cheap and spills to disk only under pressure — keeps
@@ -144,7 +129,12 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
 
     The returned dict's ``persisted`` entry lists every frame this call
     persisted; per-batch/per-bucket callers pass it to
-    ``unpersist_all`` after their writes (see harvest docstring)."""
+    ``unpersist_all`` after their writes (see harvest docstring).
+
+    Entity promotion (the copy_harvested_properties/update_item cycle,
+    pywdcollections.py:476-498,416-434) is not part of the result:
+    callers that need it run ``operators.promote.promote_to_entities``
+    over the triples they read or committed."""
     persisted: list[DataFrame] = []
     # census rows ride the persisted parse only when it IS persisted —
     # unpersisted, the census branch would re-run the parse UDFs, which
@@ -174,7 +164,7 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
                        "source", "site_qid", "url", "warc_ts"))
     rejects = validated.filter(~F.col("valid")) \
                        .select("subj", "pred", "obj_raw", "source", "url", "reject_reason")
-    out = _LazyOut({
+    return {
         "staged": staged,
         "validated": validated,
         "triples": triples,
@@ -185,17 +175,7 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
                     else lineage(pages, validated,
                                  n_buckets=lineage_buckets)),
         "persisted": persisted,
-    })
-    # promotion: the copy_harvested_properties/update_item cycle
-    # (pywdcollections.py:476-498,416-434) as one set-based merge.
-    # Built LAZILY on first access (r7): plan construction is eager
-    # driver work in classic PySpark (~0.3 s for the wide merge), and
-    # the bench/checkpoint callers never read "entities" — a per-group
-    # checkpoint run paid it once per commit unit for nothing.
-    from pywdcollections_spark.operators.promote import promote_to_entities
-    out.lazy("entities",
-             lambda: promote_to_entities(dims["entities_seed"], triples))
-    return out
+    }
 
 
 def unpersist_all(out: dict) -> None:

@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pywdcollections_spark.localtable import local_table
 from pywdcollections_spark.operators import dedup as D
 from pywdcollections_spark.operators import similarity as SIM
 from pywdcollections_spark.operators import textstats as TS
@@ -133,7 +134,7 @@ GROUP BY c_nationkey
 """)
 def f2_excluded_anti_join(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer")
-    excluded = spark.createDataFrame([(0,), (1,), (2,)], "c_nationkey bigint")
+    excluded = local_table(spark, [(0,), (1,), (2,)], "c_nationkey bigint")
     return (cust.join(F.broadcast(excluded), "c_nationkey", "left_anti")
             .groupBy("c_nationkey").agg(F.count("*").alias("n_customers")))
 

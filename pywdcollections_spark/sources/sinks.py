@@ -20,8 +20,16 @@ from __future__ import annotations
 import os
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+def path_not_found(e: Exception) -> bool:
+    """Whether ``e`` is Spark's missing-path error: the one read failure
+    that means "no table yet". Any other read error on an existing
+    path is a real fault and must propagate."""
+    return isinstance(e, AnalysisException) and e.getCondition() == "PATH_NOT_FOUND"
 
 
 def merge_last_wins(existing: DataFrame, updates: DataFrame,
@@ -138,7 +146,10 @@ class ParquetUpsertSink(UpsertSink):
                    .filter("_rn = 1").drop("_rn"))
         try:
             existing = self.read()
-        except Exception:       # first write: no target yet
+        except AnalysisException as e:
+            if not path_not_found(e):
+                raise
+            # first write: no target yet
             write_atomic(deduped, self.path, self.partition_by)
             return
         if self.partition_by and set(self.partition_by) <= set(keys):

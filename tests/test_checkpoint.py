@@ -2,11 +2,15 @@
 resumes from lineage and ends with tables identical to an
 uninterrupted run."""
 
+import glob
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import demo_config
-from pywdcollections_spark.plans.checkpoint import run_with_checkpoint
+from pywdcollections_spark.plans.checkpoint import completed_buckets, run_with_checkpoint
 from pywdcollections_spark.testkit import spark_tables as TK
 
 N = 200
@@ -203,3 +207,35 @@ def test_non_divisible_bucket_groups_cover_all_buckets(spark, env, tmp_path_fact
     # and the remainder buckets actually carry their data
     tr = spark.read.parquet(f"{out_dir}/triples")
     assert tr.select("bucket").distinct().count() >= 8
+
+
+def test_corrupt_lineage_file_raises_not_reruns(spark, env, tmp_path_factory):
+    """Only a MISSING lineage directory means "nothing done": a
+    lineage file that cannot be read must fail the run, not be taken
+    as an empty lineage that re-runs every bucket over committed data."""
+    pages, dims = env
+    out_dir = str(tmp_path_factory.mktemp("corrupt"))
+    assert completed_buckets(spark, out_dir) == []          # missing: fresh run
+    run_with_checkpoint(spark, pages, demo_config(), dims, out_dir)
+    assert sorted(completed_buckets(spark, out_dir)) == list(range(16))
+
+    lineage = os.path.join(out_dir, "lineage")
+    victim = sorted(glob.glob(os.path.join(lineage, "*.parquet")))[0]
+    with open(victim, "wb") as f:
+        f.write(b"not a parquet file")
+    triples = sorted(glob.glob(os.path.join(out_dir, "triples", "*", "*.parquet")))
+    mtimes = [os.path.getmtime(p) for p in triples]
+
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        completed_buckets(spark, out_dir)
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        run_with_checkpoint(spark, pages, demo_config(), dims, out_dir)
+    # the committed data was not rewritten
+    assert [os.path.getmtime(p) for p in triples] == mtimes
+
+
+def test_lineage_dir_without_committed_file_reads_empty(spark, tmp_path):
+    """A kill inside the first lineage write leaves the directory with
+    no committed parquet file: nothing is done yet, not a read error."""
+    (tmp_path / "lineage" / "_temporary").mkdir(parents=True)
+    assert completed_buckets(spark, str(tmp_path)) == []

@@ -9,8 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import demo_config
+from pywdcollections_spark.localtable import local_table
 from pywdcollections_spark.operators.parse import text_parity
-from pywdcollections_spark.plans.pipeline import build_kg, harvest
+from pywdcollections_spark.operators.promote import promote_to_entities
+from pywdcollections_spark.plans.checkpoint import group_lineage
+from pywdcollections_spark.plans.pipeline import build_kg, harvest, unpersist_all
 from pywdcollections_spark.testkit import spark_tables as TK
 
 N_PAGES = 300
@@ -77,7 +80,7 @@ def test_full_build_outputs(spark, fixture_tables):
     assert lin.filter(F.col("n_pages") <= 0).count() == 0
     # promoted entity table: every valid triple's value landed unless the
     # entity already had one (F4 null-gate)
-    ents = out["entities"].cache()
+    ents = promote_to_entities(dims["entities_seed"], triples).cache()
     assert ents.count() == dims["entities_seed"].count()
     promoted = (triples.groupBy("subj").count()
                 .join(ents, triples["subj"] == ents["qid"]))
@@ -122,3 +125,46 @@ def test_lineage_page_identity_is_url_warc_ts(spark, fixture_tables):
     rescan = build_kg(spark, both, demo_config(), dims, persist=False)["lineage"]
     assert census.agg(F.sum("n_pages")).first()[0] == N_PAGES + 5
     assert rescan.agg(F.sum("n_pages")).first()[0] == N_PAGES + 5
+
+
+def _driver_rdd_leaves(df) -> list[str]:
+    """Plan nodes that scan an RDD: a ``LogicalRDD`` leaf in the
+    optimized plan, or the ``Scan ExistingRDD`` it becomes inside a
+    cached subtree (InMemoryRelation prints its physical plan)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln.strip() for ln in plan.splitlines()
+            if "LogicalRDD" in ln or "ExistingRDD" in ln]
+
+
+def test_kg_plans_have_no_driver_rdd_leaves(spark, tmp_path_factory):
+    """The pipeline's constant tables (template map, property
+    constraints, validator dispatch, a commit group's bucket list) are
+    LocalRelations: no plan leaf is a list-built RDD, whose every scan
+    would re-run Python workers. Inputs are parquet, so any RDD leaf
+    left would be the pipeline's own."""
+    base = str(tmp_path_factory.mktemp("plan_inputs"))
+    TK.pages_df(spark, 40, SEED, head_templates=5).write.parquet(f"{base}/pages")
+    pages = spark.read.parquet(f"{base}/pages")
+    dims = TK.read_dim_parquet(spark, TK.write_dim_parquet(spark, 40, SEED, base))
+    out = build_kg(spark, pages, demo_config(), dims, lineage_buckets=8)
+    try:
+        assert _driver_rdd_leaves(out["triples"]) == []
+        assert _driver_rdd_leaves(group_lineage(spark, [0, 1, 2], out["lineage"])) == []
+    finally:
+        unpersist_all(out)
+
+
+def test_local_table_schema_and_round_trip(spark):
+    ddl = "pred string, constraints array<long>, n int"
+    empty = local_table(spark, [], ddl)
+    assert empty.schema.simpleString() == "struct<pred:string,constraints:array<bigint>,n:int>"
+    assert empty.count() == 0
+    rows = [{"pred": "P1", "constraints": [2**62, -(2**40), 0], "n": 2**31 - 1},
+            ("P2", [], -(2**31)),
+            ("P3", None, None)]
+    df = local_table(spark, rows, ddl)
+    assert _driver_rdd_leaves(df) == []
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == [("P1", [2**62, -(2**40), 0], 2**31 - 1),
+                   ("P2", [], -(2**31)),
+                   ("P3", None, None)]

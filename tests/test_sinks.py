@@ -2,7 +2,11 @@
 backend's MERGE INTO shape + fail-fast (no catalog in this sandbox —
 production swap-in is configuration, sources/sinks.py docstring)."""
 
+import glob
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from pywdcollections_spark.sources.sinks import (
     IcebergUpsertSink,
@@ -283,3 +287,26 @@ def test_pruned_upsert_caps_literal_predicate(spark, tmp_path):
     got = {r["site"]: r["v"] for r in sink.read().collect()}
     assert got == {"s0": "newer", "s1": "newer", "s2": "newer",
                    "s3": "new", "s4": "old", "s5": "old"}
+
+
+def test_unreadable_existing_table_raises_and_is_not_rewritten(spark, tmp_path):
+    """Only a missing path is a first write: an existing table that
+    cannot be read must fail the upsert, not be overwritten with just
+    the batch (which would drop every row already stored)."""
+    path = str(tmp_path / "claims")
+    sink = ParquetUpsertSink(spark, path)
+    sink.upsert(spark.createDataFrame([("Q1", "v", 1), ("Q2", "w", 1)],
+                                      "k string, v string, ts long"),
+                keys=["k"], order_col="ts")
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    for p in files:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    before = {p: open(p, "rb").read() for p in files}
+
+    batch = spark.createDataFrame([("Q3", "x", 2)], "k string, v string, ts long")
+    with pytest.raises(Py4JJavaError):
+        sink.upsert(batch, keys=["k"], order_col="ts")
+    after = {p: open(p, "rb").read()
+             for p in sorted(glob.glob(os.path.join(path, "*.parquet")))}
+    assert after == before
