@@ -1,6 +1,6 @@
 """Generic same-window A/B of one environment knob on the full KG job.
 
-Same protocol as ab_salt.py: pinned 4-core child JVMs, interleaved
+Protocol: pinned 4-core child JVMs, interleaved
 ABBA legs so linear VM drift cancels, warmup run per child before the
 timed run, triple-count equality asserted across all legs.
 

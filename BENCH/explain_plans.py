@@ -16,10 +16,13 @@ import os
 import sys
 from contextlib import redirect_stdout
 
+from pyspark.storagelevel import StorageLevel
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pywdcollections_spark.config import demo_config  # noqa: E402
+from pywdcollections_spark.plans.checkpoint import group_lineage  # noqa: E402
 from pywdcollections_spark.plans.pipeline import build_kg  # noqa: E402
 from pywdcollections_spark.session import get_spark  # noqa: E402
 from pywdcollections_spark.testkit import spark_tables as TK  # noqa: E402
@@ -45,13 +48,17 @@ def main():
     pages = spark.read.parquet(f"{base}/pages.parquet")
     dims = TK.read_dim_parquet(spark, dim_paths)
 
-    # persist=True is the production shape: the parsed-template rows
-    # materialize once and the mapping fan-out reads the cache — the
-    # plan must show exactly ONE ArrowEvalPython (extract+parse) branch
-    out = build_kg(spark, pages, demo_config(), dims, persist=True)
+    # the parsed-template rows materialize once and the mapping fan-out
+    # reads the cache — the plan must show exactly ONE ArrowEvalPython
+    # (extract+parse) branch. validated is persisted and the lineage
+    # plan is one commit group's rows, as run_with_checkpoint does
+    out = build_kg(spark, pages, demo_config(), dims)
+    validated = out["validated"].persist(StorageLevel.MEMORY_AND_DISK)
     out["triples"].count()  # execute so AQE finalizes (codegen ids visible)
     triples_plan = formatted(out["triples"])
-    lineage_plan = formatted(out["lineage"])
+    lineage = group_lineage(spark, list(range(16)), out["templates"],
+                            validated, 16)
+    lineage_plan = formatted(lineage)
 
     # the parse stage in isolation (pipeline step 1-2): the one subtree
     # the template cache materializes
@@ -118,7 +125,7 @@ def main():
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         return sum(1 for ln in plan.splitlines()
                    if "LogicalRDD" in ln or "ExistingRDD" in ln)
-    n_rdd = rdd_leaves(out["triples"]) + rdd_leaves(out["lineage"])
+    n_rdd = rdd_leaves(out["triples"]) + rdd_leaves(lineage)
     check("KG constant tables are LocalRelations: 0 LogicalRDD leaves",
           n_rdd == 0, f"{n_rdd} LogicalRDD/ExistingRDD leaves in triples+lineage")
     check("lineage is one pass: no pages scan outside the parse cache",
@@ -132,30 +139,20 @@ def main():
     # subtree reprints). Default = single phase: partial+final
     # SortAggregate around ONE exchange (map-side combine is the skew
     # taming) and NO join node (the slower rewrite's signature).
-    from pywdcollections_spark.operators.canonicalize import salted_last_wins
+    from pywdcollections_spark.operators.canonicalize import last_wins
     # key must not be provably unique (a range id key lets the planner
     # elide the exchange entirely and hides the shape under audit)
     slw_in = spark.range(100).selectExpr(
         "id % 5 as k", "id as o", "string(id) as v")
-    slw_tree = formatted(salted_last_wins(
+    slw_tree = formatted(last_wins(
         slw_in, keys=["k"], order_cols=["o"],
         payload_cols=["v"])).split("\n\n")[0]
-    check("canonicalize default: single-phase max_by (partial+final, one "
+    check("canonicalize: single-phase max_by (partial+final, one "
           "exchange, no join)",
           slw_tree.count("SortAggregate") == 2
           and slw_tree.count("Exchange") == 1 and "Join" not in slw_tree,
           f"{slw_tree.count('SortAggregate')} SortAggregate nodes, "
           f"{slw_tree.count('Exchange')} Exchange, join-free")
-    # the explicit salted path stays first-class: two phases, each
-    # partial+final, still join-free
-    slw16_tree = formatted(salted_last_wins(
-        slw_in, keys=["k"], order_cols=["o"], payload_cols=["v"],
-        salt_buckets=16)).split("\n\n")[0]
-    check("canonicalize salted path: two salted SortAggregate phases, no join-back",
-          slw16_tree.count("SortAggregate") == 4
-          and slw16_tree.count("Exchange") == 2 and "Join" not in slw16_tree,
-          f"{slw16_tree.count('SortAggregate')} SortAggregate nodes "
-          "(2 logical phases x partial+final), join-free")
     check("embedding dedup has NO cartesian/nested-loop node",
           "BroadcastNestedLoopJoin" not in emb_plan
           and "CartesianProduct" not in emb_plan)

@@ -133,13 +133,7 @@ def run_kg(spark, n_pages: int, seed: int = 42,
     # (sources.readers.DIM_SCHEMAS note); Iceberg supplies this in prod
     pages = spark.read.schema(TK.PAGES_SCHEMA).parquet(path)
     dims = TK.read_dim_parquet(spark, dim_paths)
-    # the benched job writes triples only -> no validated barrier
-    # (plans/pipeline.py persist_validated note)
-    result = build_kg(spark, pages, demo_config(), dims,
-                      n_partitions=n_parts,
-                      persist_validated=False,
-                      salt_buckets=int(os.environ.get(
-                          "SPARK_GRAFT_SALT_BUCKETS", "1")))
+    result = build_kg(spark, pages, demo_config(), dims, n_partitions=n_parts)
     result["triples"].write.mode("overwrite").parquet(out)
     wall = time.time() - t0
     n_triples = spark.read.parquet(out).count()

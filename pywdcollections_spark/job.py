@@ -87,13 +87,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "of re-reading the full input (one extra full "
                         "write; pays off from ~3 commit units; skip "
                         "when the input is already bucket-partitioned)")
-    p.add_argument("--salt-buckets", type=int, default=1,
-                   help="canonicalization skew handling: 1 (default) = "
-                        "single-phase map-side-combined max_by — the "
-                        "configuration the round-5 A/B measured fastest "
-                        "(operators/canonicalize.py); N>1 = explicit "
-                        "two-phase salted aggregate, for buffers partial "
-                        "aggregation cannot shrink (collect_list-style)")
     p.add_argument("--n-partitions", type=int, default=None,
                    help="parse-stage partition count (default: "
                         "spark.default.parallelism)")
@@ -133,8 +126,7 @@ def main(argv: list[str] | None = None) -> dict:
         n_buckets=args.n_buckets, bucket_groups=args.bucket_groups,
         pages_per_group=args.pages_per_group,
         stage_input=args.stage_input,
-        n_partitions=args.n_partitions, use_html=not args.no_html,
-        salt_buckets=args.salt_buckets)
+        n_partitions=args.n_partitions, use_html=not args.no_html)
     summary = {"out": args.out, "config": config.name, **summary}
 
     if args.entities:
@@ -143,27 +135,13 @@ def main(argv: list[str] | None = None) -> dict:
         # handles) through the same sink seam the sync cycle uses —
         # NULL-gated merge, changed-rows-only upsert, idempotent re-run
         import os
-        from pyspark.errors import AnalysisException
         from pywdcollections_spark.operators.promote import promote_to_entities
-        from pywdcollections_spark.plans.sync import changed_entity_rows
-        from pywdcollections_spark.sources.sinks import ParquetUpsertSink, path_not_found
-        entities_path = os.path.join(args.out, "entities")
-        sink = ParquetUpsertSink(spark, entities_path)
-        # explicit first-run test (ADVICE r4/r5): probe through the
-        # sink's own read so the branch works on ANY --out filesystem
-        # (hdfs://, s3a://), not just local paths. ONLY the
-        # missing-path condition means "first run" — a genuine read
-        # error on an EXISTING table must propagate, not silently
-        # reseed from entities_seed and discard accumulated state.
-        try:
-            current = sink.read()
-        except AnalysisException as e:
-            if not path_not_found(e):
-                raise
-            # first run: seed the table
-            current = dims["entities_seed"]
-            sink.upsert(current, keys=["qid"], order_col="last_modified")
-            current = sink.read()
+        from pywdcollections_spark.plans.sync import changed_entity_rows, read_or_seed
+        from pywdcollections_spark.sources.sinks import ParquetUpsertSink
+        sink = ParquetUpsertSink(spark, os.path.join(args.out, "entities"))
+        # the sink's own probe works on ANY --out filesystem (hdfs://,
+        # s3a://); only a missing table means "first run" (ADVICE r4/r5)
+        current = read_or_seed(sink, dims["entities_seed"])
         triples = spark.read.parquet(os.path.join(args.out, "triples"))
         # localCheckpoint: the change-detection join runs once, not
         # once for the count and again inside the upsert

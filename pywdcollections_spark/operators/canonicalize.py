@@ -7,22 +7,15 @@ page the LAST save of a (subject, source, pred) wins
 and (template_idx, param_idx) the save order.
 
 Skew: one head subject carries ~10^4x the median saves (FIXTURES.md
-skew clause). The skew handling is EXPLICIT either way (north rule):
-
-- default ``salt_buckets=1``: single-phase ``max_by``. The argmax
-  buffer is partially aggregable, so a hot key leaves each map task as
-  AT MOST ONE pre-reduced row — the exchange carries <= n_map_tasks
-  rows per key regardless of skew. That is the same hot-key taming a
-  salt provides, without the second full-data exchange.
-- ``salt_buckets=N``: explicit two-phase salted argmax, for
-  aggregations whose buffers partial aggregation cannot shrink
-  (collect_list-style) or engines without map-side combine. Kept
-  first-class and parity-tested (tests/test_skew.py).
-
-Round-5 A/B (1.5M pages, 4 pinned cores, interleaved ABBA, full KG
-job): salted16 walls 138.8/137.6 s vs single-phase 134.0/136.4 s —
-single-phase wins both pairs (~2%), identical 2,518,965 triples in
-all four legs; hence the default. See BENCH/BASELINE.md round-5.
+skew clause). The skew handling is explicit (north rule): a
+single-phase ``max_by`` whose argmax buffer is partially aggregable, so
+a hot key leaves each map task as AT MOST ONE pre-reduced row — the
+exchange carries <= n_map_tasks rows per key regardless of skew. That
+is the hot-key taming a salt provides, without a second full-data
+exchange. Round-5 A/B (1.5M pages, 4 pinned cores, interleaved ABBA,
+full KG job): a two-phase salted argmax (16 salts) walled 138.8/137.6 s
+vs single-phase 134.0/136.4 s, identical 2,518,965 triples in all four
+legs; see BENCH/BASELINE.md round-5.
 """
 
 from __future__ import annotations
@@ -33,12 +26,10 @@ from pyspark.sql import functions as F
 STAGE_KEY = ["subj", "source", "pred"]
 
 
-def salted_last_wins(df: DataFrame, keys: list[str], order_cols: list[str],
-                     payload_cols: list[str], salt_buckets: int = 1) -> DataFrame:
-    """Skew-aware argmax, deterministic for any row order: single-phase
-    map-side-combined ``max_by`` by default, explicit two-phase salted
-    (groupBy(keys+salt) max_by -> groupBy(keys) max_by) when
-    ``salt_buckets`` > 1 (see module docstring for the A/B).
+def last_wins(df: DataFrame, keys: list[str], order_cols: list[str],
+              payload_cols: list[str]) -> DataFrame:
+    """Skew-aware argmax, deterministic for any row order: one
+    map-side-combined ``max_by`` per key (see module docstring).
 
     max_by with a struct payload lowers to SortAggregate (string/struct
     buffers are not hash-aggregable). That is DELIBERATE, not an
@@ -53,25 +44,12 @@ def salted_last_wins(df: DataFrame, keys: list[str], order_cols: list[str],
     straight sorts are cheaper. See BENCH/BASELINE.md round-5 notes."""
     ordk = F.struct(*[F.col(c) for c in order_cols])
     pay = F.struct(*[F.col(c) for c in order_cols + payload_cols])
-    if salt_buckets <= 1:
-        # single-phase: max_by partial-aggregates map-side, so a hot key
-        # reaches the exchange as at most one row PER MAP TASK — the
-        # skew taming the salt provides, without the second exchange.
-        phase = df.groupBy(*keys).agg(F.max_by(pay, ordk).alias("_w"))
-        return phase.select(*keys, *[F.col(f"_w.{c}").alias(c)
-                                     for c in order_cols + payload_cols])
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets)))
-    phase1 = (salted.groupBy(*keys, "_salt")
-              .agg(F.max_by(pay, ordk).alias("_w")))
-    ordk2 = F.struct(*[F.col(f"_w.{c}") for c in order_cols])
-    phase2 = (phase1.groupBy(*keys)
-              .agg(F.max_by(F.col("_w"), ordk2).alias("_w")))
-    return phase2.select(*keys, *[F.col(f"_w.{c}").alias(c)
-                                  for c in order_cols + payload_cols])
+    return (df.groupBy(*keys).agg(F.max_by(pay, ordk).alias("_w"))
+            .select(*keys, *[F.col(f"_w.{c}").alias(c)
+                             for c in order_cols + payload_cols]))
 
 
-def canonicalize(cands: DataFrame, salt_buckets: int = 1) -> DataFrame:
+def canonicalize(cands: DataFrame) -> DataFrame:
     """Candidate saves -> staged triples (the `harvested` analogue):
     subj, pred, obj_raw, datatype, source, url, warc_ts."""
     df = (cands
@@ -79,8 +57,7 @@ def canonicalize(cands: DataFrame, salt_buckets: int = 1) -> DataFrame:
           .withColumn("source", F.col("site"))
           .select("subj", "source", "pred", "datatype", "url", "warc_ts",
                   "template_idx", "param_idx", F.col("val").alias("obj_raw")))
-    return (salted_last_wins(df, STAGE_KEY,
-                             order_cols=["template_idx", "param_idx"],
-                             payload_cols=["obj_raw", "datatype", "url", "warc_ts"],
-                             salt_buckets=salt_buckets)
+    return (last_wins(df, STAGE_KEY,
+                      order_cols=["template_idx", "param_idx"],
+                      payload_cols=["obj_raw", "datatype", "url", "warc_ts"])
             .select("subj", "pred", "obj_raw", "datatype", "source", "url", "warc_ts"))

@@ -25,6 +25,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from pywdcollections_spark.config import CollectionConfig
 from pywdcollections_spark.localtable import local_table
@@ -103,19 +104,28 @@ def _stage_input(spark: SparkSession, pages_b: DataFrame, out_dir: str,
     return spark.read.parquet(staging)
 
 
-def group_lineage(spark: SparkSession, todo: list[int],
-                  lineage: DataFrame) -> DataFrame:
-    """The lineage rows one commit group appends. EVERY bucket in
-    ``todo`` gets a row — including zero-page buckets, which would
-    otherwise be retried forever. The census comes from build_kg's own
-    lineage frame (bucketed on the run's n_buckets via
-    lineage_buckets): n_pages = distinct (url, warc_ts) snapshots — the
-    page identity all lineage forms share (ADVICE r4) — counted from
-    the persisted parse pass, so the pages table is not re-scanned per
-    group."""
+def group_lineage(spark: SparkSession, todo: list[int], templates: DataFrame,
+                  validated: DataFrame, n_buckets: int) -> DataFrame:
+    """The lineage rows one commit group appends: bucket, n_pages,
+    n_triples, completed_at. EVERY bucket in ``todo`` gets a row —
+    including zero-page buckets, which would otherwise be retried
+    forever.
+
+    The page census is build_kg's persisted ``templates`` frame, which
+    holds one or more rows for every input page, so the pages table is
+    not re-scanned per group. A page is one distinct (url, warc_ts)
+    snapshot (ADVICE r4); the distinct partial-aggregates per partition
+    before the bucket shuffle. ``n_triples`` counts the valid rows of
+    ``validated``. Both sides bucket with ``bucket_col``, the hash the
+    data writes partition on."""
+    bucket = bucket_col(F.col("url"), n_buckets).alias("bucket")
+    pg = (templates.groupBy(bucket)
+          .agg(F.countDistinct(F.struct("url", "warc_ts")).alias("n_pages")))
+    tr = (validated.groupBy(bucket)
+          .agg(F.sum(F.col("valid").cast("long")).alias("n_triples")))
     todo_df = local_table(spark, [(b,) for b in todo], "bucket long")
     return (todo_df
-            .join(lineage.select("bucket", "n_pages", "n_triples"), "bucket", "left")
+            .join(pg.join(tr, "bucket", "left"), "bucket", "left")
             .fillna(0, ["n_pages", "n_triples"])
             .withColumn("completed_at", F.current_timestamp()))
 
@@ -128,7 +138,8 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
                         stage_input: bool = False,
                         max_groups: int | None = None,
                         fail_before_lineage: int | None = None,
-                        **kg_kwargs) -> dict:
+                        n_partitions: int | None = None,
+                        use_html: bool = True) -> dict:
     """Process pages in ``bucket_groups`` commit units (each covering
     n_buckets/bucket_groups url-hash buckets). ``bucket_groups=None``
     (default) sizes the commit units to the INPUT: enough groups that
@@ -184,7 +195,14 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
             break
         subset = pages_b.filter(F.col("bucket").isin(todo))
         out = build_kg(spark, subset.drop("bucket"), config, dims,
-                       lineage_buckets=n_buckets, **kg_kwargs)
+                       n_partitions=n_partitions, use_html=use_html)
+        # validated fans out into triples, rejects and lineage: one
+        # barrier, flat columns -> in-memory columnar cache with disk
+        # spill. out["triples"] and out["rejects"], derived before this
+        # call, read the cache too: Spark substitutes cached subplans
+        # when a plan runs
+        validated = out["validated"].persist(StorageLevel.MEMORY_AND_DISK)
+        out["persisted"].append(validated)
         triples = out["triples"].withColumn("bucket", bucket_col(F.col("url"), n_buckets))
         rejects = out["rejects"].withColumn("bucket", bucket_col(F.col("url"), n_buckets))
         _write_bucketed(triples, os.path.join(out_dir, "triples"), n_buckets)
@@ -193,7 +211,7 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
             raise RuntimeError("simulated kill inside data->lineage window")
         # lineage rows commit last: a bucket is "done" only after its
         # data lands
-        (group_lineage(spark, todo, out["lineage"])
+        (group_lineage(spark, todo, out["templates"], validated, n_buckets)
          .write.mode("append").parquet(os.path.join(out_dir, "lineage")))
         # this group's outputs are all committed: release the pipeline
         # persists so per-group DISK_ONLY caches don't accumulate for

@@ -65,7 +65,7 @@ def debug_page(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
         dims["target_p31"], dims["class_p279"], prop_constraints_df(spark))
     out["linked"] = linked.collect()
 
-    staged = C.canonicalize(linked, salt_buckets=1)
+    staged = C.canonicalize(linked)
     out["staged"] = staged.collect()
 
     validated = V.validate(staged, spark, dims["entities_seed"], dims["items"],

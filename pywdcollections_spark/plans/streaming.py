@@ -39,11 +39,7 @@ def stream_harvest(spark: SparkSession, pages_dir: str, out_dir: str,
     progress = {"batches": 0, "rows_in": 0}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # triples is the ONLY materialized pipeline output per batch ->
-        # no validated barrier (pipeline.build_kg persist_validated
-        # rule: persist only at real fan-outs)
-        out = build_kg(spark, batch_df, config, dims,
-                       persist_validated=False)
+        out = build_kg(spark, batch_df, config, dims)
         (out["triples"].withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

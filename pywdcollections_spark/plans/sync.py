@@ -50,6 +50,18 @@ def changed_entity_rows(current: DataFrame, promoted: DataFrame) -> DataFrame:
             .drop(*[f"_cur_{p}" for p in pcols]))
 
 
+def read_or_seed(sink: UpsertSink, seed: DataFrame) -> DataFrame:
+    """The sink's entity table, seeded from ``seed`` on the first cycle.
+    Only a missing table is a first cycle (``UpsertSink.read_if_exists``):
+    a read error on an existing table propagates instead of reseeding
+    over the state it holds."""
+    current = sink.read_if_exists()
+    if current is None:
+        sink.upsert(seed, keys=["qid"], order_col="last_modified")
+        current = sink.read()
+    return current
+
+
 def run_promotion_cycle(spark: SparkSession, pages: DataFrame,
                         config: CollectionConfig, dims: dict[str, DataFrame],
                         entities_sink: UpsertSink,
@@ -62,13 +74,7 @@ def run_promotion_cycle(spark: SparkSession, pages: DataFrame,
     ``entities_changed == 0`` / ``labels_written == 0`` and leaves the
     sink tables byte-identical (idempotence, tested in tests/test_sync.py).
     """
-    try:
-        current = entities_sink.read()
-    except Exception:           # first cycle: seed the table
-        current = dims["entities_seed"]
-        entities_sink.upsert(current, keys=["qid"], order_col="last_modified")
-        current = entities_sink.read()
-
+    current = read_or_seed(entities_sink, dims["entities_seed"])
     out = build_kg(spark, pages, config, dims)
     promoted = promote_to_entities(current, out["triples"])
     # materialize the change-detection join ONCE: without this the
@@ -86,9 +92,8 @@ def run_promotion_cycle(spark: SparkSession, pages: DataFrame,
 
     n_labels = 0
     if incoming_labels is not None and labels_sink is not None:
-        try:
-            existing = labels_sink.read()
-        except Exception:
+        existing = labels_sink.read_if_exists()
+        if existing is None:
             existing = incoming_labels.limit(0)
         merged = merge_labels(existing, incoming_labels,
                               overwrite=overwrite_labels, value_col="label")

@@ -43,6 +43,13 @@ def merge_last_wins(existing: DataFrame, updates: DataFrame,
             .filter("_rn = 1").drop("_rn", "_src"))
 
 
+def _dedupe_batch(updates: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+    """One row per key of an update batch: the highest ``order_col``."""
+    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+    return (updates.withColumn("_rn", F.row_number().over(w))
+            .filter("_rn = 1").drop("_rn"))
+
+
 def write_atomic(df: DataFrame, path: str, partition_by: list[str] | None = None):
     w = df.write.mode("overwrite")
     if partition_by:
@@ -107,6 +114,18 @@ class UpsertSink:
     def read(self) -> DataFrame:
         raise NotImplementedError
 
+    def read_if_exists(self) -> DataFrame | None:
+        """The first-run probe: the table, or None when there is none
+        yet. Only a missing path means "no table"; every other read
+        error (a corrupt or unreadable file) propagates, so a caller
+        never reseeds over existing state."""
+        try:
+            return self.read()
+        except AnalysisException as e:
+            if not path_not_found(e):
+                raise
+            return None
+
     def maintain(self) -> None:
         """K4: compaction / file maintenance. Optional."""
         raise NotImplementedError
@@ -141,16 +160,11 @@ class ParquetUpsertSink(UpsertSink):
     max_literal_partitions = 1000
 
     def upsert(self, updates: DataFrame, keys: list[str], order_col: str) -> None:
-        w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-        deduped = (updates.withColumn("_rn", F.row_number().over(w))
-                   .filter("_rn = 1").drop("_rn"))
-        try:
-            existing = self.read()
-        except AnalysisException as e:
-            if not path_not_found(e):
-                raise
+        existing = self.read_if_exists()
+        if existing is None:
             # first write: no target yet
-            write_atomic(deduped, self.path, self.partition_by)
+            write_atomic(_dedupe_batch(updates, keys, order_col),
+                         self.path, self.partition_by)
             return
         if self.partition_by and set(self.partition_by) <= set(keys):
             if self._pruned_upsert(existing, updates, keys, order_col):
@@ -229,6 +243,11 @@ class IcebergUpsertSink(UpsertSink):
     def read(self) -> DataFrame:
         return self.spark.table(self.table)
 
+    def read_if_exists(self) -> DataFrame:
+        # construction proved the table exists: every read error is a
+        # real fault, never "no table yet"
+        return self.read()
+
     def maintain(self) -> None:  # pragma: no cover - needs Iceberg catalog
         catalog = self.table.split(".")[0]
         self.spark.sql(
@@ -236,9 +255,7 @@ class IcebergUpsertSink(UpsertSink):
 
     def upsert(self, updates: DataFrame, keys: list[str], order_col: str) -> None:
         # dedupe the batch first so MERGE sees one row per key
-        w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-        batch = (updates.withColumn("_rn", F.row_number().over(w))
-                 .filter("_rn = 1").drop("_rn"))
+        batch = _dedupe_batch(updates, keys, order_col)
         # per-call unique view name: two sinks upserting concurrently in
         # one session must not race on a shared temp view
         view = f"_updates_{uuid.uuid4().hex}"

@@ -10,6 +10,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import demo_config
+from pywdcollections_spark.plans import checkpoint
 from pywdcollections_spark.plans.checkpoint import completed_buckets, run_with_checkpoint
 from pywdcollections_spark.testkit import spark_tables as TK
 
@@ -239,3 +240,27 @@ def test_lineage_dir_without_committed_file_reads_empty(spark, tmp_path):
     no committed parquet file: nothing is done yet, not a read error."""
     (tmp_path / "lineage" / "_temporary").mkdir(parents=True)
     assert completed_buckets(spark, str(tmp_path)) == []
+
+
+def test_bucketed_writes_read_the_validated_cache(spark, env, tmp_path, monkeypatch):
+    """run_with_checkpoint persists build_kg's validated frame, the one
+    fan-out into triples, rejects and lineage. Both bucketed writes must
+    read that cache, though their frames were derived before the
+    persist call: the plan Spark runs holds an InMemoryRelation whose
+    output carries validate's reject_reason column."""
+    pages, dims = env
+    plans = {}
+    write = checkpoint._write_bucketed
+
+    def recording(df, path, n_buckets):
+        plans[os.path.basename(path)] = \
+            df._jdf.queryExecution().withCachedData().toString()
+        write(df, path, n_buckets)
+
+    monkeypatch.setattr(checkpoint, "_write_bucketed", recording)
+    run_with_checkpoint(spark, pages, demo_config(), dims, str(tmp_path),
+                        n_buckets=4, bucket_groups=2, max_groups=1)
+    assert set(plans) == {"triples", "rejects"}
+    for name, plan in plans.items():
+        assert any("InMemoryRelation" in ln and "reject_reason#" in ln
+                   for ln in plan.splitlines()), name

@@ -103,26 +103,23 @@ def test_load_config_rejects_non_config():
 
 
 def test_job_default_canonicalize_is_single_phase(spark):
-    """The CLI default must be the configuration the round-5 A/B
-    measured fastest (VERDICT r5 #1): salt_buckets=1 -> single-phase
-    map-side-combined max_by (one exchange, join-free), and auto
-    commit-unit sizing (bucket_groups=None)."""
+    """The job runs the configuration the round-5 A/B measured fastest
+    (VERDICT r5 #1): single-phase map-side-combined max_by (one
+    exchange, join-free), and auto commit-unit sizing
+    (bucket_groups=None)."""
     import io
     from contextlib import redirect_stdout
 
-    from pywdcollections_spark.operators.canonicalize import salted_last_wins
+    from pywdcollections_spark.operators.canonicalize import last_wins
 
     args = J.build_parser().parse_args(
         ["--pages", "p", "--dims-dir", "d", "--out", "o"])
-    assert args.salt_buckets == 1
     assert args.bucket_groups is None
 
     # non-unique key so the planner cannot elide the exchange
     df = spark.range(100).selectExpr("id % 5 as k", "id as o",
                                      "string(id) as v")
-    out = salted_last_wins(df, keys=["k"], order_cols=["o"],
-                           payload_cols=["v"],
-                           salt_buckets=args.salt_buckets)
+    out = last_wins(df, keys=["k"], order_cols=["o"], payload_cols=["v"])
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.explain("formatted")

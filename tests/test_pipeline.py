@@ -12,8 +12,8 @@ from pywdcollections_spark.config import demo_config
 from pywdcollections_spark.localtable import local_table
 from pywdcollections_spark.operators.parse import text_parity
 from pywdcollections_spark.operators.promote import promote_to_entities
-from pywdcollections_spark.plans.checkpoint import group_lineage
-from pywdcollections_spark.plans.pipeline import build_kg, harvest, unpersist_all
+from pywdcollections_spark.plans.checkpoint import bucket_col, group_lineage
+from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
 from pywdcollections_spark.testkit import spark_tables as TK
 
 N_PAGES = 300
@@ -29,6 +29,12 @@ def fixture_tables(spark):
     return pages, dims, golden
 
 
+def _lineage(spark, out, n_buckets=64):
+    """The lineage rows a single commit group over every bucket writes."""
+    return group_lineage(spark, list(range(n_buckets)), out["templates"],
+                         out["validated"], n_buckets)
+
+
 def test_text_extraction_byte_parity(spark, fixture_tables):
     pages, _, _ = fixture_tables
     par = text_parity(pages).cache()
@@ -42,7 +48,7 @@ def test_text_extraction_byte_parity(spark, fixture_tables):
 
 def test_harvest_matches_golden_exactly(spark, fixture_tables):
     pages, dims, golden = fixture_tables
-    staged = harvest(spark, pages, demo_config(), dims).cache()
+    staged = build_kg(spark, pages, demo_config(), dims)["staged"].cache()
     key = ["subj", "pred", "obj_raw", "source"]
     got = staged.select(*key)
     exp = golden.select(*key)
@@ -75,9 +81,11 @@ def test_full_build_outputs(spark, fixture_tables):
     reasons = {r["reject_reason"] for r in rejects.select("reject_reason").distinct().collect()}
     assert "writer_not_implemented" in reasons     # dates (P571)
     assert "bad_coordinates" in reasons            # '%s|%s|0' defect rows
-    # lineage covers every bucket with pages
-    lin = out["lineage"]
-    assert lin.filter(F.col("n_pages") <= 0).count() == 0
+    # lineage counts pages in exactly the buckets that hold pages
+    lin = _lineage(spark, out)
+    page_buckets = {r[0] for r in pages.select(bucket_col(F.col("url"), 64))
+                    .distinct().collect()}
+    assert {r["bucket"] for r in lin.filter("n_pages > 0").collect()} == page_buckets
     # promoted entity table: every valid triple's value landed unless the
     # entity already had one (F4 null-gate)
     ents = promote_to_entities(dims["entities_seed"], triples).cache()
@@ -106,25 +114,22 @@ def test_lineage_census_counts_pages_without_staged_rows(spark, fixture_tables):
 
     out = build_kg(spark, both, demo_config(), dims)
     baseline = build_kg(spark, pages, demo_config(), dims)
-    assert out["lineage"].agg(F.sum("n_pages")).first()[0] == N_PAGES + 2
+    assert _lineage(spark, out).agg(F.sum("n_pages")).first()[0] == N_PAGES + 2
     # the two census-only pages contribute no staged rows
     assert out["staged"].count() == baseline["staged"].count()
 
 
 def test_lineage_page_identity_is_url_warc_ts(spark, fixture_tables):
-    """ADVICE r4: both lineage forms count a page as one distinct
-    (url, warc_ts) snapshot — a url captured under two warc_ts is two
-    pages in census mode (persist=True, lineage_from_parse) AND in
-    re-scan mode (persist=False, lineage)."""
+    """ADVICE r4: lineage counts a page as one distinct (url, warc_ts)
+    snapshot — a url captured under two warc_ts is two pages in the
+    census."""
     pages, dims, _ = fixture_tables
     cols = ["url", "warc_ts", "html", "text", "lang"]
     shifted = (pages.select(*cols).limit(5)
                .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")))
     both = pages.select(*cols).unionByName(shifted)
-    census = build_kg(spark, both, demo_config(), dims)["lineage"]
-    rescan = build_kg(spark, both, demo_config(), dims, persist=False)["lineage"]
+    census = _lineage(spark, build_kg(spark, both, demo_config(), dims))
     assert census.agg(F.sum("n_pages")).first()[0] == N_PAGES + 5
-    assert rescan.agg(F.sum("n_pages")).first()[0] == N_PAGES + 5
 
 
 def _driver_rdd_leaves(df) -> list[str]:
@@ -146,10 +151,11 @@ def test_kg_plans_have_no_driver_rdd_leaves(spark, tmp_path_factory):
     TK.pages_df(spark, 40, SEED, head_templates=5).write.parquet(f"{base}/pages")
     pages = spark.read.parquet(f"{base}/pages")
     dims = TK.read_dim_parquet(spark, TK.write_dim_parquet(spark, 40, SEED, base))
-    out = build_kg(spark, pages, demo_config(), dims, lineage_buckets=8)
+    out = build_kg(spark, pages, demo_config(), dims)
     try:
         assert _driver_rdd_leaves(out["triples"]) == []
-        assert _driver_rdd_leaves(group_lineage(spark, [0, 1, 2], out["lineage"])) == []
+        lin = group_lineage(spark, [0, 1, 2], out["templates"], out["validated"], 8)
+        assert _driver_rdd_leaves(lin) == []
     finally:
         unpersist_all(out)
 

@@ -4,7 +4,7 @@ and feeds the pipeline to the same triples as the parquet path."""
 import pytest
 
 from pywdcollections_spark.config import demo_config
-from pywdcollections_spark.plans.pipeline import build_kg
+from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
 from pywdcollections_spark.sources.readers import read_pages, write_pages_jsonl
 from pywdcollections_spark.testkit import spark_tables as TK
 
@@ -38,12 +38,13 @@ def test_jsonl_pages_build_identical_kg(spark, paths):
     pq, jl = paths
     dims = TK.dim_dfs(spark, N, SEED)
     key = ["subj", "pred", "obj_norm", "source"]
-    t_pq = build_kg(spark, read_pages(spark, pq, "parquet"), demo_config(),
-                    dims, persist=False)["triples"].select(key)
-    t_jl = build_kg(spark, read_pages(spark, jl, "jsonl"), demo_config(),
-                    dims, persist=False)["triples"].select(key)
+    out_pq = build_kg(spark, read_pages(spark, pq, "parquet"), demo_config(), dims)
+    out_jl = build_kg(spark, read_pages(spark, jl, "jsonl"), demo_config(), dims)
+    t_pq, t_jl = out_pq["triples"].select(key), out_jl["triples"].select(key)
     assert t_pq.count() == t_jl.count() > 0
     assert t_pq.exceptAll(t_jl).count() == 0 and t_jl.exceptAll(t_pq).count() == 0
+    unpersist_all(out_pq)
+    unpersist_all(out_jl)
 
 
 def test_unknown_format_rejected(spark):

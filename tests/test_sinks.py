@@ -7,6 +7,7 @@ import os
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 
 from pywdcollections_spark.sources.sinks import (
     IcebergUpsertSink,
@@ -310,3 +311,28 @@ def test_unreadable_existing_table_raises_and_is_not_rewritten(spark, tmp_path):
     after = {p: open(p, "rb").read()
              for p in sorted(glob.glob(os.path.join(path, "*.parquet")))}
     assert after == before
+
+
+def test_read_if_exists_reports_no_table_only_on_missing_path(spark, tmp_path):
+    """The first-run probe: a missing path is "no table"; an existing
+    path that cannot be read (a directory with no data file, whose
+    schema cannot be inferred) raises."""
+    path = tmp_path / "claims"
+    sink = ParquetUpsertSink(spark, str(path))
+    assert sink.read_if_exists() is None
+    path.mkdir()
+    with pytest.raises(AnalysisException):
+        sink.read_if_exists()
+    path.rmdir()
+    sink.upsert(spark.createDataFrame([("Q1", "v", 1)], "k string, v string, ts long"),
+                keys=["k"], order_col="ts")
+    assert sink.read_if_exists().count() == 1
+
+
+def test_iceberg_probe_raises_every_read_error(spark, tmp_path):
+    """A constructed IcebergUpsertSink has proved its table exists, so
+    even a missing-path error on read is a fault, never "no table"."""
+    sink = IcebergUpsertSink.__new__(IcebergUpsertSink)
+    sink.read = lambda: spark.read.parquet(str(tmp_path / "gone"))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        sink.read_if_exists()

@@ -1,10 +1,10 @@
-"""Skew hardening (SURVEY.md §5.5): the salted two-phase
-canonicalization must equal the unsalted single-phase result under
-head-key skew, and row order must not matter."""
+"""Skew hardening (SURVEY.md §5.5): the single-phase map-side-combined
+canonicalization keeps the last save of a head key under skew, and
+row order must not matter."""
 
 from pyspark.sql import functions as F
 
-from pywdcollections_spark.operators.canonicalize import canonicalize, salted_last_wins
+from pywdcollections_spark.operators.canonicalize import canonicalize, last_wins
 
 
 def _cands(spark):
@@ -23,15 +23,13 @@ def _cands(spark):
               .withColumn("datatype", F.lit("string")))
 
 
-def test_salted_equals_unsalted(spark):
-    cands = _cands(spark).cache()
-    key = ["subj", "pred", "obj_raw", "source"]
-    salted = canonicalize(cands, salt_buckets=16).select(*key)
-    unsalted = canonicalize(cands, salt_buckets=1).select(*key)
-    assert salted.exceptAll(unsalted).count() == 0
-    assert unsalted.exceptAll(salted).count() == 0
-    head = {r["obj_raw"] for r in salted.filter("subj = 'Qh'").collect()}
+def test_head_key_last_save_wins(spark):
+    staged = canonicalize(_cands(spark)).cache()
+    head = {r["obj_raw"] for r in staged.filter("subj = 'Qh'").collect()}
     assert head == {"v4999"}  # last save wins on the head key
+    # one row per (subj, source, pred), each the key's last save
+    rest = {(r["subj"], r["obj_raw"]) for r in staged.filter("subj != 'Qh'").collect()}
+    assert rest == {(f"Q{s}", f"img{s}_2") for s in range(50)}
 
 
 def test_order_invariance(spark):
@@ -42,7 +40,7 @@ def test_order_invariance(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_salted_last_wins_tie_break_deterministic(spark):
+def test_last_wins_tie_break_deterministic(spark):
     # identical order keys -> max_by must still be deterministic because
     # payloads are totally ordered by the order columns upstream; here we
     # verify equal (template_idx, param_idx) rows collapse consistently
@@ -50,8 +48,8 @@ def test_salted_last_wins_tie_break_deterministic(spark):
         [("Q1", "s", "P1", 0, 0, "a"), ("Q1", "s", "P1", 0, 1, "b")],
         "subj string, source string, pred string, template_idx int, "
         "param_idx int, obj_raw string")
-    out = salted_last_wins(df, ["subj", "source", "pred"],
-                           ["template_idx", "param_idx"], ["obj_raw"])
+    out = last_wins(df, ["subj", "source", "pred"],
+                    ["template_idx", "param_idx"], ["obj_raw"])
     assert out.collect()[0]["obj_raw"] == "b"
 
 

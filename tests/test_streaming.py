@@ -6,7 +6,7 @@ import glob
 import pytest
 
 from pywdcollections_spark.config import demo_config
-from pywdcollections_spark.plans.pipeline import build_kg
+from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
 from pywdcollections_spark.plans.streaming import stream_harvest
 from pywdcollections_spark.testkit import spark_tables as TK
 
@@ -35,11 +35,11 @@ def test_stream_matches_batch_and_resumes_cleanly(spark, env):
 
     got = (spark.read.parquet(f"{out_dir}/triples")
            .select("subj", "pred", "obj_norm", "source"))
-    exp = build_kg(spark, spark.read.parquet(pages_dir), demo_config(), dims,
-                   persist=False)["triples"] \
-        .select("subj", "pred", "obj_norm", "source")
+    batch = build_kg(spark, spark.read.parquet(pages_dir), demo_config(), dims)
+    exp = batch["triples"].select("subj", "pred", "obj_norm", "source")
     assert got.count() == exp.count() > 0
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+    unpersist_all(batch)
 
     # restart with the same checkpoint: nothing new to process
     prog2 = stream_harvest(spark, pages_dir, out_dir, demo_config(), dims, ckpt)

@@ -4,7 +4,11 @@ cycle 2 over the same pages is a committed no-op (a5/c16b idempotence
 through the sink API, mirroring the reference's already-present guard
 holding on re-run, pywdcollections.py:1099)."""
 
+import glob
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import demo_config
@@ -21,6 +25,18 @@ def env(spark):
     pages = TK.pages_df(spark, N, SEED, head_templates=20).cache()
     dims = TK.dim_dfs(spark, N, SEED)
     return pages, dims
+
+
+class RecordingSink(ParquetUpsertSink):
+    """Parquet sink that records every batch handed to ``upsert``."""
+
+    def __init__(self, spark, path):
+        super().__init__(spark, path)
+        self.batches = []
+
+    def upsert(self, updates, keys, order_col):
+        self.batches.append(updates)
+        super().upsert(updates, keys, order_col)
 
 
 def _snapshot(sink):
@@ -65,18 +81,11 @@ def test_upsert_batch_materialized_once(spark, env, tmp_path):
     optimized plan is an ExistingRDD scan, not the live qid-join plan
     that the count already ran)."""
     pages, dims = env
-    captured = []
-
-    class RecordingSink(ParquetUpsertSink):
-        def upsert(self, updates, keys, order_col):
-            captured.append(updates)
-            super().upsert(updates, keys, order_col)
-
     esink = RecordingSink(spark, str(tmp_path / "entities_once"))
     r = run_promotion_cycle(spark, pages, demo_config(), dims, esink)
     assert r["entities_changed"] > 0
-    # captured[0] is the first-cycle seed; captured[-1] the changed batch
-    plan = captured[-1]._jdf.queryExecution().optimizedPlan().toString()
+    # batches[0] is the first-cycle seed; batches[-1] the changed batch
+    plan = esink.batches[-1]._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
 
 
@@ -90,3 +99,26 @@ def test_changed_entity_rows_null_safe(spark):
         "qid string, P17 string, P18 string")
     got = [r["qid"] for r in changed_entity_rows(cur, promoted).collect()]
     assert got == ["Q2"]
+
+
+def test_corrupt_entities_table_raises_and_is_not_reseeded(spark, env, tmp_path):
+    """Only a missing entity table is a first cycle: a table that exists
+    but cannot be read fails the cycle before any write — no reseed
+    attempt, and the stored files stay byte-identical."""
+    pages, dims = env
+    path = str(tmp_path / "entities")
+    ParquetUpsertSink(spark, path).upsert(dims["entities_seed"], keys=["qid"],
+                                          order_col="last_modified")
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    for p in files:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    before = {p: open(p, "rb").read() for p in files}
+
+    esink = RecordingSink(spark, path)
+    with pytest.raises(Py4JJavaError):
+        run_promotion_cycle(spark, pages, demo_config(), dims, esink)
+    assert esink.batches == []
+    after = {p: open(p, "rb").read()
+             for p in sorted(glob.glob(os.path.join(path, "*.parquet")))}
+    assert after == before
