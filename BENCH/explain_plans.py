@@ -60,8 +60,9 @@ def main():
                             validated, 16)
     lineage_plan = formatted(lineage)
 
-    # the parse stage in isolation (pipeline step 1-2): the one subtree
-    # the template cache materializes
+    # the parse stage in isolation (pipeline step 1-2) in its one form,
+    # the page census (outer explode + left sitelink join): the one
+    # subtree the template cache materializes
     from pywdcollections_spark.operators import parse as P
     templates = P.resolve_subjects(
         P.extract_and_parse(pages, n_partitions=4), dims["sitelinks"])

@@ -69,7 +69,9 @@ def build_parser() -> argparse.ArgumentParser:
                    default="pywdcollections_spark.config:demo_config",
                    help="module.path:factory returning a CollectionConfig")
     p.add_argument("--n-buckets", type=int, default=64,
-                   help="url-hash buckets (checkpoint/lineage unit)")
+                   help="url-hash buckets (checkpoint/lineage unit; a "
+                        "resume of an --out must use the count it was "
+                        "committed with)")
     p.add_argument("--bucket-groups", type=int, default=None,
                    help="commit units per run (buckets per commit = "
                         "n-buckets / bucket-groups). Default: auto — "

@@ -17,9 +17,11 @@ north star. Semantics preserved exactly, including the quirks:
    (:222-223 — quirk: they are kept) and exactly one resolved mention
    wins anyway; otherwise NULL -> no triple (:224).
 
-At fixture scale all dims broadcast; at web scale sitelinks is a big
-table — the join degrades gracefully to shuffle joins with AQE skew
-handling (head titles like country names are the classic skew key).
+The plan carries no broadcast hints: AQE broadcasts every dim that
+sits under autoBroadcastJoinThreshold (all of them at fixture scale);
+at web scale sitelinks is a big table and the join degrades gracefully
+to shuffle joins with AQE skew handling (head titles like country
+names are the classic skew key).
 """
 
 from __future__ import annotations
@@ -48,15 +50,13 @@ def target_classes(target_p31: DataFrame, class_p279: DataFrame) -> DataFrame:
 
 def link_entity_values(cands: DataFrame, sitelinks: DataFrame, redirects: DataFrame,
                        target_p31: DataFrame, class_p279: DataFrame,
-                       prop_constraints: DataFrame,
-                       broadcast_dims: bool = True) -> DataFrame:
+                       prop_constraints: DataFrame) -> DataFrame:
     """Replace ``val`` of entity-datatype candidate rows with the linked
     QID; rows that resolve to nothing are dropped (no triple)."""
     # NOTE: no explicit broadcast() hints — dims sit far under
     # autoBroadcastJoinThreshold so AQE plans broadcast joins from stats;
     # an explicit hint on a persisted downstream plan triggers a measured
     # ~10x materialization pathology (AQE + hint + InMemoryRelation).
-    b = lambda df: df
 
     ent = cands.filter(F.col("datatype") == "entity")
     rest = cands.filter(F.col("datatype") != "entity")
@@ -77,10 +77,10 @@ def link_entity_values(cands: DataFrame, sitelinks: DataFrame, redirects: DataFr
                           & (redirects["to_title"] == sitelinks["title"]))
                     .select(redirects["site"],
                             F.col("from_title").alias("title"), "qid"))
-    sl = b(direct.unionByName(via_redirect)
-           .select(F.col("site").alias("sl_site"),
-                   F.col("title").alias("sl_title"),
-                   F.col("qid").alias("target_qid")))
+    sl = (direct.unionByName(via_redirect)
+          .select(F.col("site").alias("sl_site"),
+                  F.col("title").alias("sl_title"),
+                  F.col("qid").alias("target_qid")))
     m = mentions.join(sl, (mentions["site"] == sl["sl_site"])
                       & (mentions["mention"] == sl["sl_title"]), "inner") \
                 .drop("sl_site", "sl_title")
@@ -88,8 +88,8 @@ def link_entity_values(cands: DataFrame, sitelinks: DataFrame, redirects: DataFr
     # one-hop class SET per target, aggregated on the DIM side so the
     # big mention table is never shuffled for the constraint check:
     # classes(qid) = {all P31} ∪ {one-hop P279 supers of each P31}
-    pc = b(prop_constraints.select(F.col("pred").alias("pc_pred"), "constraints"))
-    tclasses = b(target_classes(target_p31, class_p279))
+    pc = prop_constraints.select(F.col("pred").alias("pc_pred"), "constraints")
+    tclasses = target_classes(target_p31, class_p279)
 
     # two joins + one select (not join/drop/join/drop/withColumn —
     # each DataFrame op re-analyzes the plan eagerly, r7)

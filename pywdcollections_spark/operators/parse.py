@@ -2,9 +2,10 @@
 
 Spark shape: repartition by url hash (explicit co-location + skew
 spreading for the downstream joins), Arrow-batched extract/parse UDFs,
-``posexplode`` to template granularity. The html binary column is
-dropped immediately after extraction so it never enters a shuffle
-(SURVEY.md §4 column-pruning note).
+``posexplode_outer`` to template granularity (one census row per
+template-less page). The html binary column is dropped immediately
+after extraction so it never enters a shuffle (SURVEY.md §4
+column-pruning note).
 
 Replaces the reference's threaded page fetch + pywikibot parse
 (pywdcollections.py:275-290,344,1041-1044).
@@ -31,19 +32,19 @@ def page_identity(pages: DataFrame) -> DataFrame:
 
 
 def extract_and_parse(pages: DataFrame, n_partitions: int | None = None,
-                      use_html: bool = True,
-                      keep_unparsed_pages: bool = False) -> DataFrame:
-    """pages -> one row per template instance.
+                      use_html: bool = True) -> DataFrame:
+    """pages -> one row per template instance, plus one row for each
+    page that has none.
 
     Output: url, warc_ts, site, title, template_idx, tname, params.
     ``template_idx`` is document order — the last-wins canonicalization
     key (upsert order, pywdcollections.py:410-411).
 
-    ``keep_unparsed_pages`` switches to an OUTER explode: a page whose
-    html yields zero templates still emits one row (null template_idx/
-    tname/params), so the single parse pass can double as the
-    per-bucket page census the lineage table needs — downstream stages
-    filter ``tname IS NOT NULL`` to recover the inner semantics.
+    The explode is OUTER: a page whose html yields zero templates still
+    emits one row (null template_idx/tname/params), so the single parse
+    pass doubles as the per-bucket page census the lineage table needs —
+    downstream stages filter ``tname IS NOT NULL`` to recover the
+    per-template rows.
     """
     df = page_identity(pages)
     if use_html:
@@ -52,10 +53,9 @@ def extract_and_parse(pages: DataFrame, n_partitions: int | None = None,
     else:
         df = df.withColumn("templates", parse_templates_udf("text"))
     df = df.drop("html", "text")  # the wide columns stop here
-    explode = F.posexplode_outer if keep_unparsed_pages else F.posexplode
     out = (df
            .select("url", "warc_ts", "site", "title",
-                   explode("templates").alias("template_idx", "template"))
+                   F.posexplode_outer("templates").alias("template_idx", "template"))
            .select("url", "warc_ts", "site", "title", "template_idx",
                    F.trim(F.lower(F.col("template.name"))).alias("tname"),
                    F.col("template.params").alias("params")))
@@ -80,16 +80,12 @@ def text_parity(pages: DataFrame) -> DataFrame:
             ))
 
 
-def resolve_subjects(templates: DataFrame, sitelinks: DataFrame,
-                     broadcast_sitelinks: bool = False,
-                     how: str = "inner") -> DataFrame:
+def resolve_subjects(templates: DataFrame, sitelinks: DataFrame) -> DataFrame:
     """J1: pair each page with its entity via (site, title) sitelinks
-    (pywdcollections.py:243,253-267). At fixture scale the dim is
-    broadcast; at 10^12-page scale sitelinks is large — drop the hint
-    and let AQE pick sort-merge with skew splitting. ``how='left'``
-    keeps unlinked pages (null qid) for the page-census path;
-    downstream filters ``qid IS NOT NULL`` to recover J1."""
-    dim = sitelinks.select("site", "title", "qid")
-    if broadcast_sitelinks:
-        dim = F.broadcast(dim)
-    return templates.join(dim, ["site", "title"], how)
+    (pywdcollections.py:243,253-267). No broadcast hint: AQE broadcasts
+    the dim when it is small and picks sort-merge with skew splitting
+    when it is not. The join is LEFT, so unlinked pages survive (null
+    qid) in the page census; downstream filters ``qid IS NOT NULL`` to
+    recover J1."""
+    return templates.join(sitelinks.select("site", "title", "qid"),
+                          ["site", "title"], "left")

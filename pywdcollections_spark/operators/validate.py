@@ -107,11 +107,11 @@ def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFram
              commons_files: DataFrame | None = None,
              file_redirects: DataFrame | None = None) -> DataFrame:
     """-> staged columns + family, valid, reject_reason, obj_norm."""
-    b = lambda df: df  # AQE auto-broadcasts dims (see linking.py note)
-    disp = b(local_table(
+    # no broadcast hints: AQE auto-broadcasts the dims (see linking.py note)
+    disp = local_table(
         spark, dispatch_rows(),
         "pred string, family string, constraints array<long>, "
-        "min_len int, max_len int, exact_len int"))
+        "min_len int, max_len int, exact_len int")
 
     df = staged.join(disp, "pred", "left")
 
@@ -123,31 +123,31 @@ def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFram
     # construction time this stage used to cost.
     existing = melt_entity_claims(entities_seed)
     # already-present for the triple's own pred (claims check + F4)
-    own = b(existing.select(F.col("qid").alias("e_qid"), F.col("pred").alias("e_pred"))
-            .withColumn("already", F.lit(True)))
+    own = (existing.select(F.col("qid").alias("e_qid"), F.col("pred").alias("e_pred"))
+           .withColumn("already", F.lit(True)))
     cols = df.columns
     df = (df.join(own, (df["subj"] == own["e_qid"]) & (df["pred"] == own["e_pred"]), "left")
             .select(*cols, F.coalesce("already", F.lit(False)).alias("already")))
 
     # J7: identical image title under ANY image property (:1151-1157)
     image_preds = [f"P{p}" for p in registry.IMAGE_PROPS]
-    img_existing = b(existing.filter(F.col("pred").isin(image_preds))
-                     .select(F.col("qid").alias("i_qid"),
-                             F.col("existing_val").alias("i_val"))
-                     .distinct().withColumn("img_dup", F.lit(True)))
+    img_existing = (existing.filter(F.col("pred").isin(image_preds))
+                    .select(F.col("qid").alias("i_qid"),
+                            F.col("existing_val").alias("i_val"))
+                    .distinct().withColumn("img_dup", F.lit(True)))
     cols = df.columns
     df = (df.join(img_existing, (df["subj"] == img_existing["i_qid"])
                   & (df["obj_raw"] == img_existing["i_val"]), "left")
             .select(*cols, F.coalesce("img_dup", F.lit(False)).alias("img_dup")))
 
     # item-family strict constraint check (:1092 -> :1017-1039)
-    it = b(items.select(F.col("qid").alias("t_qid")).withColumn("t_exists", F.lit(True)))
+    it = items.select(F.col("qid").alias("t_qid")).withColumn("t_exists", F.lit(True))
     cols = df.columns
     df = (df.join(it, df["obj_raw"] == it["t_qid"], "left")
             .select(*cols, F.coalesce("t_exists", F.lit(False)).alias("t_exists")))
     # per-target class-set dim join (no shuffle of the triple table)
     from pywdcollections_spark.operators.linking import target_classes
-    tclasses = b(target_classes(target_p31, class_p279))
+    tclasses = target_classes(target_p31, class_p279)
     cols = df.columns
     df = (df.join(tclasses, df["obj_raw"] == tclasses["cls_qid"], "left")
             .select(*cols, "classes",
@@ -169,16 +169,16 @@ def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFram
         # getCategoryRedirectTarget), so a dim carrying two targets for
         # one title must not fan staged rows out — min(to_title) is the
         # deterministic pick
-        redir = b(commons_redirects
-                  .groupBy(F.col("from_title").alias("r_from"))
-                  .agg(F.min("to_title").alias("r_to")))
+        redir = (commons_redirects
+                 .groupBy(F.col("from_title").alias("r_from"))
+                 .agg(F.min("to_title").alias("r_to")))
         cols = df.columns
         df = (df.join(redir, df["clean_cat"] == redir["r_from"], "left")
                 .select(*cols, F.coalesce("r_to", "clean_cat").alias("resolved_cat")))
     else:
         df = df.withColumn("resolved_cat", F.col("clean_cat"))
-    cats = b(commons_categories.select(F.col("title").alias("cat_title"))
-             .distinct().withColumn("cat_exists", F.lit(True)))
+    cats = (commons_categories.select(F.col("title").alias("cat_title"))
+            .distinct().withColumn("cat_exists", F.lit(True)))
     cols = df.columns
     df = (df.join(cats, df["resolved_cat"] == cats["cat_title"], "left")
             .select(*cols, F.coalesce("cat_exists", F.lit(False)).alias("cat_exists")))
@@ -189,17 +189,17 @@ def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFram
     if file_redirects is not None:
         # one resolved target per source title (same fan-out guard as
         # the category-redirect dim above)
-        fredir = b(collapse_redirect_chains(file_redirects)
-                   .groupBy(F.col("from_title").alias("f_from"))
-                   .agg(F.min("to_title").alias("f_to")))
+        fredir = (collapse_redirect_chains(file_redirects)
+                  .groupBy(F.col("from_title").alias("f_from"))
+                  .agg(F.min("to_title").alias("f_to")))
         cols = df.columns
         df = (df.join(fredir, df["clean_img"] == fredir["f_from"], "left")
                 .select(*cols, F.coalesce("f_to", "clean_img").alias("resolved_img")))
     else:
         df = df.withColumn("resolved_img", F.col("clean_img"))
     if commons_files is not None:
-        fdim = b(commons_files.select(F.col("title").alias("file_title"))
-                 .distinct().withColumn("file_exists", F.lit(True)))
+        fdim = (commons_files.select(F.col("title").alias("file_title"))
+                .distinct().withColumn("file_exists", F.lit(True)))
         cols = df.columns
         df = (df.join(fdim, df["resolved_img"] == fdim["file_title"], "left")
                 .select(*cols,

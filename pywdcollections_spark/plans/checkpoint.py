@@ -5,7 +5,8 @@ per-(entity,site) last_harvested watermark, pywdcollections.py:397).
 Layout under ``out_dir``:
     triples/   parquet partitioned by bucket
     rejects/   parquet partitioned by bucket
-    lineage/   parquet append-only: one row per completed bucket
+    lineage/   parquet append-only: one row per completed bucket, with
+               the n_buckets that defines it
 
 A run processes only buckets absent from lineage. Crash-window
 discipline: data lands with dynamic-partition OVERWRITE keyed on
@@ -15,7 +16,9 @@ state whose re-run replaces the partial bucket partitions instead of
 appending them twice, yielding tables identical to a single
 uninterrupted run (both windows tested in tests/test_checkpoint.py).
 Every bucket in a group gets a lineage row, including buckets with
-zero pages, so sparse inputs are not reprocessed forever.
+zero pages, so sparse inputs are not reprocessed forever. A bucket id
+means nothing without its n_buckets, so a resume under a different
+n_buckets refuses instead of overlapping the committed partitions.
 """
 
 from __future__ import annotations
@@ -37,21 +40,34 @@ def bucket_col(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets))
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
+def completed_buckets(spark: SparkSession, out_dir: str, n_buckets: int) -> list[int]:
     """Buckets with a committed lineage row. Only a missing lineage
     directory means "nothing done yet"; any other read error (a corrupt
     or unreadable lineage file) propagates — treating it as empty would
     re-run every bucket over committed data. The explicit schema makes
     a lineage directory with no committed file (a kill inside the first
-    lineage write) read as empty rather than fail schema inference."""
+    lineage write) read as empty rather than fail schema inference.
+
+    Raises ValueError when a committed row was written under another
+    ``n_buckets``: its bucket ids hash a different url split, so
+    resuming would append overlapping partitions. Rows with a null
+    ``n_buckets`` (lineage written before the column existed) are
+    accepted."""
     lineage_path = os.path.join(out_dir, "lineage")
     try:
-        lin = spark.read.schema("bucket long").parquet(lineage_path)
+        lin = spark.read.schema("bucket long, n_buckets long").parquet(lineage_path)
     except AnalysisException as e:
         if not path_not_found(e):
             raise
         return []
-    return [r["bucket"] for r in lin.distinct().collect()]
+    rows = lin.distinct().collect()
+    other = sorted({r["n_buckets"] for r in rows} - {n_buckets, None})
+    if other:
+        raise ValueError(
+            f"{lineage_path} was committed with n_buckets="
+            f"{', '.join(map(str, other))}; this run has n_buckets={n_buckets}. "
+            "Resume with the committed n_buckets or write to a fresh out_dir.")
+    return sorted({r["bucket"] for r in rows})
 
 
 def _write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
@@ -89,16 +105,13 @@ def _stage_input(spark: SparkSession, pages_b: DataFrame, out_dir: str,
 
     Crash-safe reuse: a completed staging write carries parquet's
     _SUCCESS marker; a kill mid-staging leaves no marker and the next
-    run rewrites it (mode=overwrite)."""
-    staging = os.path.join(out_dir, "_staged_pages")
-    done_marker = os.path.join(staging, "_SUCCESS")
-    try:
-        marker_exists = (spark._jvm.org.apache.hadoop.fs.Path(done_marker)
-                         .getFileSystem(spark._jsc.hadoopConfiguration())
-                         .exists(spark._jvm.org.apache.hadoop.fs.Path(done_marker)))
-    except Exception:
-        marker_exists = os.path.exists(done_marker)
-    if not marker_exists:
+    run rewrites it (mode=overwrite). The path holds ``n_buckets``, so
+    a table bucketed under another count is never reused. The marker
+    probe goes through the Hadoop FileSystem of ``out_dir`` (hdfs://,
+    s3a://, file:) and its errors propagate."""
+    staging = os.path.join(out_dir, "_staged_pages", f"n_buckets={n_buckets}")
+    marker = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(staging, "_SUCCESS"))
+    if not marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(marker):
         (pages_b.repartition(n_buckets, F.col("bucket"))
          .write.mode("overwrite").partitionBy("bucket").parquet(staging))
     return spark.read.parquet(staging)
@@ -107,7 +120,7 @@ def _stage_input(spark: SparkSession, pages_b: DataFrame, out_dir: str,
 def group_lineage(spark: SparkSession, todo: list[int], templates: DataFrame,
                   validated: DataFrame, n_buckets: int) -> DataFrame:
     """The lineage rows one commit group appends: bucket, n_pages,
-    n_triples, completed_at. EVERY bucket in ``todo`` gets a row —
+    n_triples, n_buckets, completed_at. EVERY bucket in ``todo`` gets a row —
     including zero-page buckets, which would otherwise be retried
     forever.
 
@@ -127,7 +140,8 @@ def group_lineage(spark: SparkSession, todo: list[int], templates: DataFrame,
     return (todo_df
             .join(pg.join(tr, "bucket", "left"), "bucket", "left")
             .fillna(0, ["n_pages", "n_triples"])
-            .withColumn("completed_at", F.current_timestamp()))
+            .withColumns({"n_buckets": F.lit(n_buckets).cast("long"),
+                          "completed_at": F.current_timestamp()}))
 
 
 def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
@@ -136,8 +150,6 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
                         bucket_groups: int | None = None,
                         pages_per_group: int = 500_000,
                         stage_input: bool = False,
-                        max_groups: int | None = None,
-                        fail_before_lineage: int | None = None,
                         n_partitions: int | None = None,
                         use_html: bool = True) -> dict:
     """Process pages in ``bucket_groups`` commit units (each covering
@@ -150,10 +162,8 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
     round-6) eight times over. Groups are COMMIT batches only — the
     resume unit is the bucket, so re-running the same --out with a
     different grouping is safe: completed buckets are skipped whatever
-    group they once belonged to. ``max_groups`` simulates a kill
-    between groups; ``fail_before_lineage`` simulates a kill INSIDE
-    group ``i``'s data->lineage window (data written, lineage not) —
-    both for tests. Returns progress counters.
+    group they once belonged to; a different ``n_buckets`` is not
+    (``completed_buckets`` refuses it). Returns progress counters.
 
     ``stage_input`` (opt-in): when more than one commit unit will run,
     pre-bucket the input once into a bucket-PARTITIONED staging table
@@ -165,7 +175,7 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
         n_pages = pages.count()
         bucket_groups = min(n_buckets,
                             max(1, -(-n_pages // max(1, pages_per_group))))
-    done = set(completed_buckets(spark, out_dir))
+    done = set(completed_buckets(spark, out_dir, n_buckets))
     pages_b = pages.withColumn("bucket", bucket_col(F.col("url"), n_buckets))
     # contiguous chunks with the remainder spread over the first groups:
     # EVERY bucket must land in exactly one commit unit — a plain
@@ -191,8 +201,6 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
         todo = [b for b in group if b not in done]
         if not todo:
             continue
-        if max_groups is not None and processed >= max_groups:
-            break
         subset = pages_b.filter(F.col("bucket").isin(todo))
         out = build_kg(spark, subset.drop("bucket"), config, dims,
                        n_partitions=n_partitions, use_html=use_html)
@@ -207,8 +215,6 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
         rejects = out["rejects"].withColumn("bucket", bucket_col(F.col("url"), n_buckets))
         _write_bucketed(triples, os.path.join(out_dir, "triples"), n_buckets)
         _write_bucketed(rejects, os.path.join(out_dir, "rejects"), n_buckets)
-        if fail_before_lineage is not None and processed == fail_before_lineage:
-            raise RuntimeError("simulated kill inside data->lineage window")
         # lineage rows commit last: a bucket is "done" only after its
         # data lands
         (group_lineage(spark, todo, out["templates"], validated, n_buckets)

@@ -34,14 +34,6 @@ def prop_constraints_df(spark: SparkSession) -> DataFrame:
     return local_table(spark, rows, "pred string, constraints array<long>")
 
 
-def template_map_df(spark: SparkSession, config: CollectionConfig) -> DataFrame:
-    """The config's template -> property map (``template_map_rows``) as
-    the mapping stage's broadcast-join side."""
-    return local_table(spark, config.template_map_rows(),
-                       "site string, template_lc string, param_lc string, "
-                       "prop_key string, pred string, datatype string")
-
-
 def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
              dims: dict[str, DataFrame], n_partitions: int | None = None,
              use_html: bool = True) -> dict[str, DataFrame]:
@@ -52,6 +44,8 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
       sitelink join (unlinked pages survive with null qid), so it holds
       one or more rows for EVERY input page and lineage counts pages
       from it without re-scanning the pages table;
+    - ``candidates`` (mapped parameter rows, persisted) and ``linked``
+      (entity values resolved to QIDs);
     - ``staged`` (the `harvested` staging analogue), ``validated``,
       ``triples`` (valid only, with provenance) and ``rejects``;
     - ``persisted``: every frame this call persisted. Per-batch and
@@ -72,18 +66,21 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     callers that need it run ``operators.promote.promote_to_entities``
     over the triples they read or committed."""
     templates = P.extract_and_parse(pages, n_partitions=n_partitions,
-                                    use_html=use_html, keep_unparsed_pages=True)
-    templates = P.resolve_subjects(templates, dims["sitelinks"], how="left")
+                                    use_html=use_html)
+    templates = P.resolve_subjects(templates, dims["sitelinks"])
     # template rows are small (html/text already dropped at the parse
     # stage). DISK_ONLY because templates carries the params ARRAY
     # column: measured ~50x faster to materialize than the in-memory
     # columnar cache on array columns
     templates = templates.persist(StorageLevel.DISK_ONLY)
-    # the mapping stage sees the inner-join / inner-explode rows exactly
+    # the mapping stage sees only linked pages' template rows; the
+    # config's template -> property map is its broadcast-join side
+    template_map = local_table(spark, config.template_map_rows(),
+                               "site string, template_lc string, param_lc string, "
+                               "prop_key string, pred string, datatype string")
     cands = M.map_parameters(templates.filter(F.col("tname").isNotNull()
                                               & F.col("qid").isNotNull()),
-                             template_map_df(spark, config),
-                             dims["template_redirects"])
+                             template_map, dims["template_redirects"])
     # cands is flat strings/ints (no arrays): the in-memory columnar
     # cache is cheap and spills to disk only under pressure — keeps the
     # linking fan-out off the shared disk
@@ -107,6 +104,8 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
                        .select("subj", "pred", "obj_raw", "source", "url", "reject_reason")
     return {
         "templates": templates,
+        "candidates": cands,
+        "linked": linked,
         "staged": staged,
         "validated": validated,
         "triples": triples,

@@ -2,7 +2,9 @@
 
 Defaults favor the production shape (many executors, AQE, Arrow); in
 the sandbox they run on local[N]. Every knob here is plain public
-Spark configuration.
+Spark configuration; the only environment overrides are the driver
+memory and core count the scaling benchmarks set for their child
+processes.
 """
 
 from __future__ import annotations
@@ -27,9 +29,8 @@ _DEFAULT_CONFS = {
     # ~1-3 KB html = 10-30 MB per batch per worker, which busts the
     # shared LLC when 8+ workers stream concurrently (the measured
     # single-box scaling limiter); smaller batches trade per-batch
-    # overhead for cache locality — override for experiments via env
-    "spark.sql.execution.arrow.maxRecordsPerBatch":
-        os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
+    # overhead for cache locality
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # config-derived dims (template maps, validators, class sets)
     # broadcast; corpus-scale dims (sitelinks at millions of rows) are
     # ABOVE this threshold on purpose — their join must take the
@@ -39,13 +40,13 @@ _DEFAULT_CONFS = {
     # local-scale inputs are ~100s of MB; smaller splits keep every core
     # scanning (at cluster scale with TB inputs, raise back to 128m)
     "spark.sql.files.maxPartitionBytes": "16m",
-    # shuffle/persist/broadcast block codec, A/B-able per environment:
-    # zstd trades CPU (which scales) for bytes through the contended
-    # memory/disk/network path (see BENCH/BASELINE.md codec A/B)
-    "spark.io.compression.codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-    # whether serialized persist blocks (the DISK_ONLY template cache)
-    # are compressed with the io codec (Spark default: false)
-    "spark.rdd.compress": os.environ.get("SPARK_GRAFT_RDD_COMPRESS", "false"),
+    # shuffle/persist/broadcast block codec: zstd trades CPU for bytes,
+    # which measured 6-22% slower on one box, where shuffle never leaves
+    # the page cache (BENCH/BASELINE.md codec A/B)
+    "spark.io.compression.codec": "lz4",
+    # serialized persist blocks (the DISK_ONLY template cache) stay
+    # uncompressed: compressing them measured no gain (BENCH/BASELINE.md)
+    "spark.rdd.compress": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",

@@ -4,6 +4,7 @@ uninterrupted run."""
 
 import glob
 import os
+import pathlib
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -30,7 +31,26 @@ def _triples(spark, out_dir):
             .select("subj", "pred", "obj_norm", "source"))
 
 
-def test_interrupted_run_resumes_identically(spark, env, tmp_path_factory):
+def _kill_on_call(monkeypatch, name, n):
+    """Make ``checkpoint.<name>`` raise on its n-th call: a kill is an
+    exception in the middle of a run, not a clean stop."""
+    real, calls = getattr(checkpoint, name), []
+
+    def killed(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == n:
+            raise RuntimeError(f"simulated kill at {name} call {n}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, name, killed)
+
+
+def _file_bytes(root):
+    return {p.relative_to(root): p.read_bytes()
+            for p in pathlib.Path(root).rglob("*") if p.is_file()}
+
+
+def test_interrupted_run_resumes_identically(spark, env, tmp_path_factory, monkeypatch):
     pages, dims = env
     full_dir = str(tmp_path_factory.mktemp("full"))
     part_dir = str(tmp_path_factory.mktemp("partial"))
@@ -40,10 +60,13 @@ def test_interrupted_run_resumes_identically(spark, env, tmp_path_factory):
     assert r_full["buckets_done"] == r_full["n_buckets"]
     assert r_full["groups_processed"] == 1
 
-    # killed after 2 of 4 groups
-    r1 = run_with_checkpoint(spark, pages, demo_config(), dims, part_dir,
-                             bucket_groups=4, max_groups=2)
-    assert r1["groups_processed"] == 2
+    # killed at group 3 of 4: groups 1 and 2 (buckets 0-7) committed
+    _kill_on_call(monkeypatch, "build_kg", 3)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_with_checkpoint(spark, pages, demo_config(), dims, part_dir,
+                            bucket_groups=4)
+    monkeypatch.undo()
+    assert completed_buckets(spark, part_dir, 16) == list(range(8))
     n_partial = _triples(spark, part_dir).count()
 
     # resume: only the remaining groups run
@@ -70,7 +93,8 @@ def test_interrupted_run_resumes_identically(spark, env, tmp_path_factory):
     assert lin.agg(F.sum("n_pages")).first()[0] == N
 
 
-def test_crash_inside_data_lineage_window_no_duplicates(spark, env, tmp_path_factory):
+def test_crash_inside_data_lineage_window_no_duplicates(spark, env, tmp_path_factory,
+                                                       monkeypatch):
     """Kill AFTER a group's data write but BEFORE its lineage commit:
     the re-run must replace that group's bucket partitions (dynamic
     partition overwrite), not append them a second time."""
@@ -80,11 +104,14 @@ def test_crash_inside_data_lineage_window_no_duplicates(spark, env, tmp_path_fac
 
     run_with_checkpoint(spark, pages, demo_config(), dims, full_dir)
 
+    # group 1 committed; group 2's data written, its lineage not
+    _kill_on_call(monkeypatch, "group_lineage", 2)
     with pytest.raises(RuntimeError, match="simulated kill"):
         run_with_checkpoint(spark, pages, demo_config(), dims, crash_dir,
-                            bucket_groups=4,
-                            fail_before_lineage=1)  # group 0 committed, group 1 data-only
-    # group 1's data is on disk but unrecorded; resume must not
+                            bucket_groups=4)
+    monkeypatch.undo()
+    assert completed_buckets(spark, crash_dir, 16) == list(range(4))
+    # group 2's data is on disk but unrecorded; resume must not
     # duplicate it — even resuming under a DIFFERENT grouping (auto =
     # one group here): dynamic-partition overwrite replaces the
     # partial bucket partitions whatever commit unit re-covers them
@@ -152,7 +179,7 @@ def test_stage_input_identical_and_pruned(spark, env, tmp_path_factory):
     r = run_with_checkpoint(spark, pages, demo_config(), dims, staged,
                             bucket_groups=4, stage_input=True)
     assert r["groups_processed"] == 4
-    staging = os.path.join(staged, "_staged_pages")
+    staging = os.path.join(staged, "_staged_pages", "n_buckets=16")
     assert os.path.exists(os.path.join(staging, "_SUCCESS"))
     # partition layout: one directory per occupied bucket
     assert any(n.startswith("bucket=") for n in os.listdir(staging))
@@ -181,14 +208,14 @@ def test_stage_input_identical_and_pruned(spark, env, tmp_path_factory):
     # kill-mid-staging: a partial staging dir WITHOUT _SUCCESS must be
     # rewritten (not trusted) and the run still completes identically
     crash = str(tmp_path_factory.mktemp("stagecrash"))
-    partial = os.path.join(crash, "_staged_pages", "bucket=0")
+    partial = os.path.join(crash, "_staged_pages", "n_buckets=16", "bucket=0")
     os.makedirs(partial)
     with open(os.path.join(partial, "garbage.parquet"), "wb") as f:
         f.write(b"\x00not parquet")
     r3 = run_with_checkpoint(spark, pages, demo_config(), dims, crash,
                              bucket_groups=4, stage_input=True)
     assert r3["groups_processed"] == 4
-    assert os.path.exists(os.path.join(crash, "_staged_pages", "_SUCCESS"))
+    assert os.path.exists(os.path.join(crash, "_staged_pages", "n_buckets=16", "_SUCCESS"))
     c = _triples(spark, crash)
     assert c.count() == a.count()
     assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
@@ -216,9 +243,9 @@ def test_corrupt_lineage_file_raises_not_reruns(spark, env, tmp_path_factory):
     as an empty lineage that re-runs every bucket over committed data."""
     pages, dims = env
     out_dir = str(tmp_path_factory.mktemp("corrupt"))
-    assert completed_buckets(spark, out_dir) == []          # missing: fresh run
+    assert completed_buckets(spark, out_dir, 16) == []      # missing: fresh run
     run_with_checkpoint(spark, pages, demo_config(), dims, out_dir)
-    assert sorted(completed_buckets(spark, out_dir)) == list(range(16))
+    assert completed_buckets(spark, out_dir, 16) == list(range(16))
 
     lineage = os.path.join(out_dir, "lineage")
     victim = sorted(glob.glob(os.path.join(lineage, "*.parquet")))[0]
@@ -228,7 +255,7 @@ def test_corrupt_lineage_file_raises_not_reruns(spark, env, tmp_path_factory):
     mtimes = [os.path.getmtime(p) for p in triples]
 
     with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
-        completed_buckets(spark, out_dir)
+        completed_buckets(spark, out_dir, 16)
     with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
         run_with_checkpoint(spark, pages, demo_config(), dims, out_dir)
     # the committed data was not rewritten
@@ -239,7 +266,7 @@ def test_lineage_dir_without_committed_file_reads_empty(spark, tmp_path):
     """A kill inside the first lineage write leaves the directory with
     no committed parquet file: nothing is done yet, not a read error."""
     (tmp_path / "lineage" / "_temporary").mkdir(parents=True)
-    assert completed_buckets(spark, str(tmp_path)) == []
+    assert completed_buckets(spark, str(tmp_path), 16) == []
 
 
 def test_bucketed_writes_read_the_validated_cache(spark, env, tmp_path, monkeypatch):
@@ -259,8 +286,55 @@ def test_bucketed_writes_read_the_validated_cache(spark, env, tmp_path, monkeypa
 
     monkeypatch.setattr(checkpoint, "_write_bucketed", recording)
     run_with_checkpoint(spark, pages, demo_config(), dims, str(tmp_path),
-                        n_buckets=4, bucket_groups=2, max_groups=1)
+                        n_buckets=4, bucket_groups=1)
     assert set(plans) == {"triples", "rejects"}
     for name, plan in plans.items():
         assert any("InMemoryRelation" in ln and "reject_reason#" in ln
                    for ln in plan.splitlines()), name
+
+
+def test_resume_with_different_n_buckets_refuses(spark, env, tmp_path_factory):
+    """Bucket ids mean nothing without the n_buckets that hashed them:
+    resuming an --out under another count must refuse, naming both
+    values, and leave the committed triples untouched — not append a
+    second, overlapping partition set."""
+    pages, dims = env
+    out_dir = str(tmp_path_factory.mktemp("rebucket"))
+    run_with_checkpoint(spark, pages, demo_config(), dims, out_dir, n_buckets=8)
+    before = _file_bytes(os.path.join(out_dir, "triples"))
+
+    with pytest.raises(ValueError, match=r"n_buckets=8\b.*n_buckets=16\b"):
+        run_with_checkpoint(spark, pages, demo_config(), dims, out_dir, n_buckets=16)
+    assert _file_bytes(os.path.join(out_dir, "triples")) == before
+    # the committed count still resumes as a no-op
+    r = run_with_checkpoint(spark, pages, demo_config(), dims, out_dir, n_buckets=8)
+    assert r["groups_processed"] == 0
+
+
+def test_lineage_without_n_buckets_column_is_accepted(spark, tmp_path):
+    """Lineage written before the n_buckets column existed reads as
+    null there and resumes under any count."""
+    spark.createDataFrame([(0,), (3,)], "bucket long") \
+        .write.parquet(str(tmp_path / "lineage"))
+    assert completed_buckets(spark, str(tmp_path), 16) == [0, 3]
+
+
+def test_staging_is_keyed_by_n_buckets(spark, env, tmp_path_factory, monkeypatch):
+    """A completed staging table bucketed under another n_buckets (a
+    run killed after staging, before its first lineage commit) must
+    not be reused: its bucket column hashes a different split, and
+    reusing it miscounts every page in the lineage."""
+    pages, dims = env
+    out_dir = str(tmp_path_factory.mktemp("restage"))
+    _kill_on_call(monkeypatch, "build_kg", 1)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_with_checkpoint(spark, pages, demo_config(), dims, out_dir,
+                            n_buckets=8, bucket_groups=4, stage_input=True)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(out_dir, "_staged_pages", "n_buckets=8", "_SUCCESS"))
+
+    r = run_with_checkpoint(spark, pages, demo_config(), dims, out_dir,
+                            n_buckets=16, bucket_groups=4, stage_input=True)
+    assert r["buckets_done"] == 16
+    lin = spark.read.parquet(f"{out_dir}/lineage")
+    assert lin.agg(F.sum("n_pages")).first()[0] == N

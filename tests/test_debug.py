@@ -60,6 +60,22 @@ def test_debug_page_by_site_title_matches_url_mode(spark, env):
     assert got == {(r["pred"], r["obj_raw"]) for r in exp}
 
 
+def test_debug_page_shows_census_row_for_template_less_page(spark, env):
+    """debug_page runs build_kg, so ``templates`` is the page census: a
+    page with no template still shows exactly one row (null tname) —
+    the answer to "why no triples?" — and nothing downstream."""
+    pages, dims = env
+    i = next(i for i in range(N) if not G.page_spec(SEED, i, N, HEAD)["templates"])
+    url = G.page_spec(SEED, i, N, HEAD)["url"]
+    out = debug_page(spark, pages, demo_config(), dims, url=url)
+
+    assert [r["url"] for r in out["page"]] == [url]
+    assert len(out["templates"]) == 1
+    row = out["templates"][0]
+    assert row["url"] == url and row["tname"] is None and row["params"] is None
+    assert out["candidates"] == [] and out["staged"] == []
+
+
 def test_debug_page_requires_a_selector(spark, env):
     pages, dims = env
     with pytest.raises(ValueError):
