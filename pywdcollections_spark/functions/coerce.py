@@ -40,11 +40,6 @@ def normalize_named_coordinate(val: str) -> str:
                .replace("N/", "N|").replace("S/", "S|") + "|0")
 
 
-def pair_split_coordinates(lat: str, lon: str) -> str:
-    """625a/625b pairing (:380-382)."""
-    return "%s|%s|0" % (lat, lon)
-
-
 def positional_coordinates(params: list[str]) -> tuple[str | None, str | None]:
     """find_coordinates_in_template (:192-201): 8-field DMS template
     -> 'd/m/s/H' strings; 2-field decimal -> the two raw fields."""
@@ -98,11 +93,6 @@ def normalize_url(website: str) -> str | None:
     return website
 
 
-def clean_image_title(title: str) -> str:
-    """File-title cleanup (:1158)."""
-    return title.replace("File:", "").replace("file:", "").strip().replace("::", ":")
-
-
 def clean_category_title(title: str) -> str:
     """Commons-category cleanup (:1212)."""
     return (title.replace("Category:", "").replace("category:", "").strip()
@@ -140,11 +130,3 @@ def string_length_ok(value: str, min_len=None, max_len=None, exact_len=None) -> 
     if max_len is not None and n > max_len:
         return False
     return True
-
-
-def qid_num(qid: str) -> int | None:
-    """'Q42' -> 42 (:152,418,460)."""
-    try:
-        return int(str(qid).split("/")[-1].replace("Q", ""))
-    except ValueError:
-        return None

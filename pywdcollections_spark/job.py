@@ -16,6 +16,10 @@ that never committed, which is also the crash-recovery story — no
 flag needed, resume is the default because completed buckets are
 skipped by construction.
 
+``--entities`` then promotes the committed triples into the wide entity
+table at ``<out>/entities`` with ``plans.sync.commit_entities``, the
+same entity commit ``run_promotion_cycle`` runs.
+
 The collection config is importable, not hard-coded: ``--config
 package.module:factory`` names a zero-arg callable returning a
 CollectionConfig (the reference's Collection-subclass declaration,
@@ -27,11 +31,14 @@ from __future__ import annotations
 import argparse
 import importlib
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
 
 from pywdcollections_spark.config import CollectionConfig
+from pywdcollections_spark.plans.sync import commit_entities
+from pywdcollections_spark.sources.sinks import ParquetUpsertSink
 
 #: dims build_kg unconditionally joins; read_dims() omits absent
 #: tables, so missing ones must fail loudly here, not as a KeyError
@@ -134,25 +141,14 @@ def main(argv: list[str] | None = None) -> dict:
     if args.entities:
         # the entity-table half of the north rule's "triple and entity
         # tables": promote the COMMITTED triples (not the lazy pipeline
-        # handles) through the same sink seam the sync cycle uses —
-        # NULL-gated merge, changed-rows-only upsert, idempotent re-run
-        import os
-        from pywdcollections_spark.operators.promote import promote_to_entities
-        from pywdcollections_spark.plans.sync import changed_entity_rows, read_or_seed
-        from pywdcollections_spark.sources.sinks import ParquetUpsertSink
+        # handles) through the one entity commit the sync cycle runs —
+        # NULL-gated merge, changed-rows-only upsert, idempotent re-run.
+        # The sink's own probe works on ANY --out filesystem (hdfs://,
+        # s3a://); only a missing table means "first run"
         sink = ParquetUpsertSink(spark, os.path.join(args.out, "entities"))
-        # the sink's own probe works on ANY --out filesystem (hdfs://,
-        # s3a://); only a missing table means "first run" (ADVICE r4/r5)
-        current = read_or_seed(sink, dims["entities_seed"])
-        triples = spark.read.parquet(os.path.join(args.out, "triples"))
-        # localCheckpoint: the change-detection join runs once, not
-        # once for the count and again inside the upsert
-        changed = changed_entity_rows(
-            current, promote_to_entities(current, triples)).localCheckpoint()
-        n_changed = changed.count()
-        if n_changed:
-            sink.upsert(changed, keys=["qid"], order_col="last_modified")
-        summary["entities_changed"] = n_changed
+        summary["entities_changed"] = commit_entities(
+            sink, dims["entities_seed"],
+            spark.read.parquet(os.path.join(args.out, "triples")))
 
     print(json.dumps(summary), flush=True)
     return summary

@@ -55,12 +55,3 @@ def parse_monolingual(col: Column, default_lang: str = "en") -> Column:
     text = F.when(tagged, F.trim(F.regexp_replace(s, r"^[a-z]{2,3}:", ""))) \
             .otherwise(s)
     return F.struct(lang.alias("lang"), text.alias("text"))
-
-
-def coerce_date_triples(staged) -> "F.DataFrame":
-    """Opt-in promotion of date-family staged rows: adds ts/precision
-    columns (NULL ts => still unpromotable, like the reference)."""
-    fd = flexible_date(F.col("obj_raw"))
-    return (staged.filter(F.col("datatype") == "date")
-            .withColumn("ts", fd["ts"])
-            .withColumn("precision", fd["precision"]))

@@ -14,9 +14,7 @@ designed for the 100 TB shape:
                            input / verification; hot shingles cappable;
                            LSH is the scale path)
  * embedding_lsh_cosine  — near-dup via cosine within hyperplane
-                           sign-buckets (equi joins, multi-table);
-                           the all-pairs form kept only as the
-                           bounded-input oracle twin
+                           sign-buckets (equi joins, multi-table)
 """
 
 from __future__ import annotations
@@ -194,14 +192,6 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     return g.select("doc", fp.alias("simhash"))
 
 
-def simhash_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return (simhash_fingerprints(df, id_col, text_col)
-            .groupBy("simhash")
-            .agg(F.count("*").alias("n_docs"),
-                 F.min("doc").alias("canonical_id"))
-            .filter(F.col("n_docs") > 1))
-
-
 def simhash_hamming_pairs(df: DataFrame, id_col: str, text_col: str,
                           bands: int = 4, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs within Hamming distance ``max_hamming``.
@@ -232,26 +222,6 @@ def simhash_hamming_pairs(df: DataFrame, id_col: str, text_col: str,
                     ham.cast("int").alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
             .dropDuplicates(["doc_a", "doc_b"]))
-
-
-def embedding_cosine_pairs(df: DataFrame, id_col: str, vec_col: str,
-                           threshold: float = 0.9,
-                           max_id: int | None = None) -> DataFrame:
-    """Near-dup by embedding cosine, ALL-PAIRS form — O(n²) theta join,
-    kept ONLY as the bounded-input oracle twin / recall reference.
-    The scale path is embedding_lsh_cosine_pairs below."""
-    # widened to double once per row (textops.as_double_array): the
-    # per-pair cosine folds then run cast-free
-    base = df.select(F.col(id_col).alias("vid"),
-                     as_double_array(F.col(vec_col)).alias("v"))
-    if max_id is not None:
-        base = base.filter(F.col("vid") < max_id)
-    a = base.select(F.col("vid").alias("id_a"), F.col("v").alias("va"))
-    b = base.select(F.col("vid").alias("id_b"), F.col("v").alias("vb"))
-    return (a.join(b, F.col("id_a") < F.col("id_b"))
-            .withColumn("cos", cosine_double(F.col("va"), F.col("vb")))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos"))
 
 
 def embedding_lsh_cosine_pairs(df: DataFrame, id_col: str, vec_col: str,

@@ -36,9 +36,13 @@ _GRAIN = ["url", "warc_ts", "site", "qid", "template_idx", "param_idx",
 
 
 def target_classes(target_p31: DataFrame, class_p279: DataFrame) -> DataFrame:
-    """(qid, classes: array<long>) — every P31 of the target plus the
+    """(cls_qid, classes: array<long>) — every P31 of the target plus the
     one-hop P279 supers of those classes (check_constraints semantics,
-    pywdcollections.py:1017-1039). Dim-sized groupBy."""
+    pywdcollections.py:1017-1039). Dim-sized groupBy, aggregated on the
+    DIM side so the big mention table is never shuffled for the
+    constraint check. build_kg builds it once and hands the same frame
+    to linking and to validate — the reference's one check_constraints
+    serves both link time (:217) and the item writer (:1092)."""
     aug = (target_p31
            .join(class_p279, target_p31["p31"] == class_p279["class_qid"], "left")
            .select(F.col("qid").alias("cls_qid"), "p31",
@@ -49,10 +53,13 @@ def target_classes(target_p31: DataFrame, class_p279: DataFrame) -> DataFrame:
 
 
 def link_entity_values(cands: DataFrame, sitelinks: DataFrame, redirects: DataFrame,
-                       target_p31: DataFrame, class_p279: DataFrame,
-                       prop_constraints: DataFrame) -> DataFrame:
+                       classes: DataFrame, rules: DataFrame) -> DataFrame:
     """Replace ``val`` of entity-datatype candidate rows with the linked
-    QID; rows that resolve to nothing are dropped (no triple)."""
+    QID; rows that resolve to nothing are dropped (no triple).
+
+    ``classes`` is ``target_classes`` output; ``rules`` is the
+    property-rule table (``validate.dispatch_table``), of which only
+    ``pred`` and ``constraints`` are read."""
     # NOTE: no explicit broadcast() hints — dims sit far under
     # autoBroadcastJoinThreshold so AQE plans broadcast joins from stats;
     # an explicit hint on a persisted downstream plan triggers a measured
@@ -85,17 +92,15 @@ def link_entity_values(cands: DataFrame, sitelinks: DataFrame, redirects: DataFr
                       & (mentions["mention"] == sl["sl_title"]), "inner") \
                 .drop("sl_site", "sl_title")
 
-    # one-hop class SET per target, aggregated on the DIM side so the
-    # big mention table is never shuffled for the constraint check:
+    # one-hop class SET per target (target_classes):
     # classes(qid) = {all P31} ∪ {one-hop P279 supers of each P31}
-    pc = prop_constraints.select(F.col("pred").alias("pc_pred"), "constraints")
-    tclasses = target_classes(target_p31, class_p279)
+    pc = rules.select(F.col("pred").alias("pc_pred"), "constraints")
 
     # two joins + one select (not join/drop/join/drop/withColumn —
     # each DataFrame op re-analyzes the plan eagerly, r7)
     mcols = m.columns
     m = (m.join(pc, m["pred"] == pc["pc_pred"], "left")
-          .join(tclasses, m["target_qid"] == tclasses["cls_qid"], "left")
+          .join(classes, m["target_qid"] == classes["cls_qid"], "left")
           .select(*mcols,
                   ((F.size(F.coalesce("constraints", F.array())) > 0)
                    & F.coalesce(F.arrays_overlap("constraints", "classes"),

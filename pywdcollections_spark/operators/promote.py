@@ -106,13 +106,3 @@ def incremental_changes(snapshot: DataFrame, incoming: DataFrame,
     """F3: rows whose (key, ts) is absent from the snapshot — the
     skip-unchanged filter of fetch() (pywdcollections.py:144-165)."""
     return incoming.join(snapshot.select(key, ts_col), [key, ts_col], "left_anti")
-
-
-def excluded_type_filter(entities: DataFrame, excluded_types: list[int],
-                         p31_col: str = "P31") -> DataFrame:
-    """F2: drop entities whose instance-of class is excluded
-    (pywdcollections.py:58-60,153-159,420-424)."""
-    if not excluded_types:
-        return entities
-    qids = [f"Q{t}" for t in excluded_types] + [str(t) for t in excluded_types]
-    return entities.filter(F.col(p31_col).isNull() | ~F.col(p31_col).isin(qids))

@@ -65,16 +65,6 @@ def minhash_signature_from_hashes(hashes: Column, k: int = 8,
     return F.array(*sig)
 
 
-def minhash_signature(shingles: Column, k: int = 8,
-                      p: int = 1_000_000_007) -> Column:
-    """Convenience form over raw shingle strings — md5 runs k times per
-    shingle because the hash subtree is unbound; prefer projecting
-    ``transform(sh, md5_hash64)`` and minhash_signature_from_hashes on
-    hot paths (dedup.minhash_lsh_pairs does)."""
-    return minhash_signature_from_hashes(
-        F.transform(shingles, md5_hash64), k=k, p=p)
-
-
 def token_hashes(col: Column) -> Column:
     """md5-derived 60-bit hash per whitespace token (array<long>).
     Project this into a COLUMN before folding per-bit statistics over
@@ -97,13 +87,6 @@ def simhash16_from_hashes(th: Column) -> Column:
             lambda acc, h: acc + (h.bitwiseAND(F.lit(1 << b)) != 0).cast("int") * 2 - 1)
         fp = fp + F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0))
     return fp
-
-
-def simhash16(col: Column) -> Column:
-    """Convenience form over raw text — 16x tokenize+md5 per row, for
-    one-off use; hot paths project token_hashes first
-    (dedup.simhash_fingerprints does)."""
-    return simhash16_from_hashes(token_hashes(col))
 
 
 def rolling_fingerprint(col: Column, mod: int = 1_000_000_007,

@@ -48,7 +48,10 @@ KEY = ["subj", "pred", "source"]
 
 def dispatch_rows() -> list[dict]:
     """write_prop's dispatch order (:1061-1085): list membership first,
-    then the specific-id writers."""
+    then the specific-id writers. One row per property: its writer
+    family, link constraints and string-shape rules. Every entity-
+    datatype spec is an ITEM_PROPS member, so the rows carry each
+    entity pred's constraints for linking too."""
     rows = {}
     for pid in registry.ITEM_PROPS:
         rows[pid] = "item"
@@ -70,6 +73,15 @@ def dispatch_rows() -> list[dict]:
             "exact_len": spec.exact_len if spec else None,
         })
     return out
+
+
+def dispatch_table(spark) -> DataFrame:
+    """``dispatch_rows`` as one LocalRelation, the property-rule table
+    build_kg builds once and hands to linking and to validate."""
+    return local_table(
+        spark, dispatch_rows(),
+        "pred string, family string, constraints array<long>, "
+        "min_len int, max_len int, exact_len int")
 
 
 def melt_entity_claims(entities_seed: DataFrame) -> DataFrame:
@@ -100,20 +112,20 @@ def collapse_redirect_chains(redirects: DataFrame,
                     F.col("dst").alias("to_title"))
 
 
-def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFrame,
-             target_p31: DataFrame, class_p279: DataFrame,
+def validate(staged: DataFrame, rules: DataFrame, entities_seed: DataFrame,
+             items: DataFrame, classes: DataFrame,
              commons_categories: DataFrame,
              commons_redirects: DataFrame | None = None,
              commons_files: DataFrame | None = None,
              file_redirects: DataFrame | None = None) -> DataFrame:
-    """-> staged columns + family, valid, reject_reason, obj_norm."""
-    # no broadcast hints: AQE auto-broadcasts the dims (see linking.py note)
-    disp = local_table(
-        spark, dispatch_rows(),
-        "pred string, family string, constraints array<long>, "
-        "min_len int, max_len int, exact_len int")
+    """-> staged columns + family, valid, reject_reason, obj_norm.
 
-    df = staged.join(disp, "pred", "left")
+    ``rules`` is ``dispatch_table`` and ``classes`` is
+    ``linking.target_classes`` output: the same frames linking reads,
+    so link time and the item writer check one rule table against one
+    class set (the reference's one check_constraints, :1017-1039)."""
+    # no broadcast hints: AQE auto-broadcasts the dims (see linking.py note)
+    df = staged.join(rules, "pred", "left")
 
     # NB (r7): every DataFrame op below re-analyzes the whole plan
     # eagerly in the JVM, so each join+drop+withColumn triple is
@@ -146,10 +158,8 @@ def validate(staged: DataFrame, spark, entities_seed: DataFrame, items: DataFram
     df = (df.join(it, df["obj_raw"] == it["t_qid"], "left")
             .select(*cols, F.coalesce("t_exists", F.lit(False)).alias("t_exists")))
     # per-target class-set dim join (no shuffle of the triple table)
-    from pywdcollections_spark.operators.linking import target_classes
-    tclasses = target_classes(target_p31, class_p279)
     cols = df.columns
-    df = (df.join(tclasses, df["obj_raw"] == tclasses["cls_qid"], "left")
+    df = (df.join(classes, df["obj_raw"] == classes["cls_qid"], "left")
             .select(*cols, "classes",
                     F.coalesce(F.arrays_overlap("constraints", "classes"),
                                F.lit(False)).alias("hop_pass")))

@@ -25,13 +25,6 @@ from pywdcollections_spark.operators import linking as L
 from pywdcollections_spark.operators import mapping as M
 from pywdcollections_spark.operators import parse as P
 from pywdcollections_spark.operators import validate as V
-from pywdcollections_spark.registry import PROP_SPECS
-
-
-def prop_constraints_df(spark: SparkSession) -> DataFrame:
-    rows = [{"pred": f"P{s.pid}", "constraints": [int(c) for c in s.constraints]}
-            for s in PROP_SPECS.values()]
-    return local_table(spark, rows, "pred string, constraints array<long>")
 
 
 def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
@@ -85,13 +78,16 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     # cache is cheap and spills to disk only under pressure — keeps the
     # linking fan-out off the shared disk
     cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    linked = L.link_entity_values(
-        cands, dims["sitelinks"], dims["redirects"],
-        dims["target_p31"], dims["class_p279"], prop_constraints_df(spark))
+    # one property-rule table and one class set serve both constraint
+    # checks, link time and the item writer (check_constraints,
+    # pywdcollections.py:1017-1039 via :217 and :1092)
+    rules = V.dispatch_table(spark)
+    classes = L.target_classes(dims["target_p31"], dims["class_p279"])
+    linked = L.link_entity_values(cands, dims["sitelinks"], dims["redirects"],
+                                  classes, rules)
     staged = C.canonicalize(linked)
-    validated = V.validate(staged, spark, dims["entities_seed"], dims["items"],
-                           dims["target_p31"], dims["class_p279"],
-                           dims["commons_categories"],
+    validated = V.validate(staged, rules, dims["entities_seed"], dims["items"],
+                           classes, dims["commons_categories"],
                            dims.get("commons_redirects"),
                            dims.get("commons_files"),
                            dims.get("file_redirects"))

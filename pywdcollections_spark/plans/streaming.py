@@ -13,6 +13,11 @@ crash-window discipline as plans.checkpoint.
 ``availableNow`` + ``maxFilesPerTrigger`` drains a backlog in bounded
 micro-batches and stops: the production backfill shape. A long-lived
 harvest is the same call with a continuous trigger.
+
+Scope: a tested extension, not a product surface (its one caller is
+tests/test_streaming.py). It commits triples only, in its own
+``batch_id`` layout — no rejects, lineage or entity table, and not the
+bucket commit of plans.checkpoint.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import CollectionConfig
 from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
+from pywdcollections_spark.sources.readers import PAGES_SCHEMA
 
 
 def stream_harvest(spark: SparkSession, pages_dir: str, out_dir: str,
@@ -32,8 +38,9 @@ def stream_harvest(spark: SparkSession, pages_dir: str, out_dir: str,
     """Drain all currently-available page files through the KG pipeline
     in micro-batches; returns progress counters. Restarting with the
     same checkpoint_dir processes only files not yet committed."""
-    schema = spark.read.parquet(pages_dir).schema
-    stream = (spark.readStream.schema(schema)
+    # the pages contract schema, as read_pages uses: no footer-inference
+    # job over the directory before the stream starts
+    stream = (spark.readStream.schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(pages_dir))
     progress = {"batches": 0, "rows_in": 0}

@@ -113,28 +113,6 @@ def datatype_of(pid: int) -> str:
     return spec.datatype if spec else "string"
 
 
-def validator_rows() -> list[dict]:
-    """Rows for the broadcast validator_spec dim table (FIXTURES.md §2)."""
-    rows = []
-    for s in PROP_SPECS.values():
-        rows.append({
-            "pred": f"P{s.pid}",
-            "datatype": s.datatype,
-            "min_len": s.min_len,
-            "max_len": s.max_len,
-            "exact_len": s.exact_len,
-            "multiple": s.multiple,
-            "constraints": [int(c) for c in s.constraints],
-            # image-extension rule, pywdcollections.py:1141-1144: only
-            # jpg/jpeg, except P94/P3311 also allow svg/png unless the
-            # title mentions 'template' / 'coa ' / 'coa.'
-            "ext_regex": (r".*\.(jpg|jpeg)$" if s.datatype == "image" and s.pid not in (94, 3311)
-                          else r".*\.(jpg|jpeg|svg|png)$" if s.pid in (94, 3311)
-                          else None),
-        })
-    return rows
-
-
 # Provenance: wiki site-id -> site QID. The full ~330-site map (public
 # Wikidata data mirroring pywdcollections.py:605-936) lives in the
 # sources_data data module; re-exported here for the dim-table build.

@@ -12,9 +12,12 @@ binary payloads make it a corruption trap.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pywdcollections_spark.sources.sinks import path_not_found
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -58,22 +61,24 @@ DIM_SCHEMAS: dict[str, object] = {
 }
 
 
-def read_dims(spark: SparkSession, dims_dir: str,
-              names: list[str] | None = None) -> dict[str, DataFrame]:
+def read_dims(spark: SparkSession, dims_dir: str) -> dict[str, DataFrame]:
     """Load the dimension tables from ``dims_dir/dim_<name>.parquet``
     with their contract schemas (inference only where the schema is
-    config-dependent). The redirect/file dims are optional — absent
-    directories are simply omitted and the pipeline skips those
-    checks, mirroring a deployment that has not mirrored commons."""
-    import os
+    config-dependent). ``dims_dir`` is a local path or any URI Spark
+    reads (``file://``, ``hdfs://``, ``s3a://``). The redirect/file dims
+    are optional — a table whose path does not exist is simply omitted
+    and the pipeline skips those checks, mirroring a deployment that has
+    not mirrored commons. Any other read error propagates (the same
+    rule as ``UpsertSink.read_if_exists``)."""
     out: dict[str, DataFrame] = {}
-    for name in (names or list(DIM_SCHEMAS)):
-        path = os.path.join(dims_dir, f"dim_{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        sch = DIM_SCHEMAS.get(name)
-        out[name] = (spark.read.schema(sch).parquet(path) if sch is not None
-                     else spark.read.parquet(path))
+    for name, sch in DIM_SCHEMAS.items():
+        path = f"{dims_dir.rstrip('/')}/dim_{name}.parquet"
+        reader = spark.read if sch is None else spark.read.schema(sch)
+        try:
+            out[name] = reader.parquet(path)
+        except AnalysisException as e:
+            if not path_not_found(e):
+                raise
     return out
 
 

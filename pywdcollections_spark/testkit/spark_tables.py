@@ -14,15 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pywdcollections_spark.sources.readers import PAGES_SCHEMA
 from pywdcollections_spark.testkit import generate as G
-
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("warc_ts", T.TimestampType()),
-    T.StructField("html", T.BinaryType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-])
 
 HARVESTED_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType()),

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from pywdcollections_spark.operators.alias_link import (
     alias_link, link_with_alias_fallback, normalize_aliases)
+from pywdcollections_spark.operators.linking import target_classes
 
 
 def _aliases(spark, rows):
@@ -100,15 +101,15 @@ def test_fallback_keeps_exact_path_and_links_residue(spark):
                                         "pred string, constraints array<long>")
     aliases = spark.createDataFrame([("Paris", "Q90")], "alias string, qid string")
 
-    out = link_with_alias_fallback(cands, sitelinks, redirects, target_p31,
-                                   class_p279, constraints, aliases,
-                                   min_score=0.3)
+    classes = target_classes(target_p31, class_p279)
+    out = link_with_alias_fallback(cands, sitelinks, redirects, classes,
+                                   constraints, aliases, min_score=0.3)
     vals = {r["url"]: r["val"] for r in out.collect()}
     assert vals == {"u1": "Q77", "u2": "Q90"}
 
     # and WITHOUT an alias hit the residue row simply stays dropped
-    out2 = link_with_alias_fallback(cands, sitelinks, redirects, target_p31,
-                                    class_p279, constraints,
+    out2 = link_with_alias_fallback(cands, sitelinks, redirects, classes,
+                                    constraints,
                                     spark.createDataFrame(
                                         [("Nothing", "Q0")],
                                         "alias string, qid string"))
@@ -142,8 +143,8 @@ def test_fallback_scores_every_mention_best_wins(spark):
                                         "pred string, constraints array<long>")
     aliases = spark.createDataFrame([("Paris", "Q90"), ("Lyon", "Q456")],
                                     "alias string, qid string")
-    out = link_with_alias_fallback(cands, empty_sl, redirects, target_p31,
-                                   class_p279, constraints, aliases,
-                                   min_score=0.2)
+    out = link_with_alias_fallback(cands, empty_sl, redirects,
+                                   target_classes(target_p31, class_p279),
+                                   constraints, aliases, min_score=0.2)
     vals = {r["url"]: r["val"] for r in out.collect()}
     assert vals == {"u1": "Q90", "u2": "Q456", "u3": "Q90"}

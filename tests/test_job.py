@@ -4,6 +4,8 @@ loud failure on a missing required dim."""
 
 import json
 import os
+import pathlib
+from collections import Counter
 
 import pytest
 
@@ -73,6 +75,31 @@ def test_job_entities_promotion_and_idempotence(spark, data_dirs, tmp_path):
     assert s2["entities_changed"] == 0
 
 
+def test_job_entities_and_sync_cycle_commit_identically(spark, data_dirs, tmp_path):
+    """One entity commit: ``--entities`` over the committed triples and
+    the sync cycle over build_kg's triples leave identical entity tables
+    for the same pages and dims."""
+    from pywdcollections_spark.config import demo_config
+    from pywdcollections_spark.plans.sync import run_promotion_cycle
+    from pywdcollections_spark.sources.readers import read_pages
+    from pywdcollections_spark.sources.sinks import ParquetUpsertSink
+
+    pages_path, dims_dir = data_dirs
+    out = str(tmp_path / "kg_job")
+    s = J.main(["--pages", pages_path, "--dims-dir", dims_dir, "--out", out,
+                "--n-buckets", "8", "--bucket-groups", "2", "--entities"])
+    sink = ParquetUpsertSink(spark, str(tmp_path / "entities_sync"))
+    r = run_promotion_cycle(spark, read_pages(spark, pages_path), demo_config(),
+                            read_dims(spark, dims_dir), sink)
+    assert s["entities_changed"] == r["entities_changed"] > 0
+
+    job_ents = spark.read.parquet(os.path.join(out, "entities"))
+    sync_ents = sink.read()
+    assert job_ents.columns == sync_ents.columns
+    rows = lambda df: Counter(tuple(r) for r in df.collect())
+    assert rows(job_ents) == rows(sync_ents)
+
+
 def test_job_missing_required_dim_fails_loudly(spark, data_dirs, tmp_path):
     import shutil
     pages_path, dims_dir = data_dirs
@@ -86,13 +113,16 @@ def test_job_missing_required_dim_fails_loudly(spark, data_dirs, tmp_path):
 
 def test_read_dims_contract_schemas(spark, data_dirs):
     _, dims_dir = data_dirs
-    dims = read_dims(spark, dims_dir)
-    assert set(J.REQUIRED_DIMS) <= set(dims)
-    # contract schema applied verbatim where declared
-    assert [f.name for f in dims["sitelinks"].schema] == ["site", "title", "qid"]
-    assert dict(dims["target_p31"].dtypes)["p31"] == "bigint"
-    # optional commons dims present in the fixture set
-    assert "commons_redirects" in dims and "file_redirects" in dims
+    # a plain path and a URI (how --dims-dir names hdfs:// or s3a://
+    # tables) read the same tables
+    for where in (dims_dir, pathlib.Path(dims_dir).as_uri()):
+        dims = read_dims(spark, where)
+        assert set(J.REQUIRED_DIMS) <= set(dims), where
+        # contract schema applied verbatim where declared
+        assert [f.name for f in dims["sitelinks"].schema] == ["site", "title", "qid"]
+        assert dict(dims["target_p31"].dtypes)["p31"] == "bigint"
+        # optional commons dims present in the fixture set
+        assert "commons_redirects" in dims and "file_redirects" in dims
     # every declared contract name round-trips (entities_seed inferred)
     assert DIM_SCHEMAS["entities_seed"] is None
 

@@ -155,7 +155,8 @@ def test_redirect_dim_with_duplicate_targets_does_not_fan_out(spark):
     duplicate staged rows through the dim join (ADVICE r3): the
     reference's per-title cache holds exactly one mapping, so the
     engine collapses to one deterministic target (min) per title."""
-    from pywdcollections_spark.operators.validate import validate
+    from pywdcollections_spark.operators.linking import target_classes
+    from pywdcollections_spark.operators.validate import dispatch_table, validate
 
     staged = spark.createDataFrame(
         [("Q1", "P373", "Old name", "string", "enwiki", "u1", "2024-01-01"),
@@ -176,7 +177,8 @@ def test_redirect_dim_with_duplicate_targets_does_not_fan_out(spark):
         [("pic.jpg", "b.jpg"), ("pic.jpg", "a.jpg")],
         "from_title string, to_title string")
 
-    out = validate(staged, spark, seed, items, p31, p279, cats,
+    out = validate(staged, dispatch_table(spark), seed, items,
+                   target_classes(p31, p279), cats,
                    commons_redirects=cat_redir, commons_files=files,
                    file_redirects=file_redir).collect()
     assert len(out) == 2                       # no fan-out
