@@ -7,13 +7,22 @@ queries to BENCH/PLANS.md, with the scan-pushdown assertions the
  * predicate pushdown must reach the parquet scans (PushedFilters);
  * dims must come in as broadcast joins;
  * relational stages must sit inside WholeStageCodegen spans.
+
+Run: ``python BENCH/explain_plans.py``. The fixture tables are written
+to a fresh temporary directory (removed afterwards), so every run plans
+over the current generator's tables; the query plans read the sf0.01
+tables in ``perfbench/data`` (or ``$SPARK_GRAFT_SF_DIR``). Local paths
+in the plan text are replaced by ``<fixtures>``, ``<sf>`` and
+``<repo>``, so the written file does not depend on where it ran.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 from pyspark.storagelevel import StorageLevel
@@ -36,12 +45,22 @@ def formatted(df) -> str:
 
 
 def main():
+    base = tempfile.mkdtemp(prefix="pywdc_explain_")
+    try:
+        plans_md = explain(base)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
+        f.write(plans_md)
+
+
+def explain(base: str) -> str:
+    """Plan the flagship pipeline and the key queries over fixture
+    tables written under ``base``; returns PLANS.md's text."""
     spark = get_spark("explain", cores=4, shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
     # materialize small fixture tables as parquet so plans show real scans
-    # (v3: dims include commons_redirects)
-    base = "/tmp/pywdc_explain_v3"
     TK.pages_df(spark, 500, 42, head_templates=20).write.mode("overwrite") \
         .parquet(f"{base}/pages.parquet")
     dim_paths = TK.write_dim_parquet(spark, 500, 42, base)
@@ -69,7 +88,8 @@ def main():
     templates_plan = formatted(templates)
 
     from pywdcollections_spark.queries import QUERIES
-    sf = "/root/testdata/sf0.01"
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR",
+                        os.path.join(REPO, "perfbench", "data", "sf0.01"))
     q1_plan = formatted(QUERIES["q1_pricing_summary"](spark, sf))
     lsh_plan = formatted(QUERIES["dedup_minhash_lsh"](spark, sf))
     emb_plan = formatted(QUERIES["dedup_embedding_cosine"](spark, sf))
@@ -227,33 +247,38 @@ def main():
           and "Exchange SinglePartition" not in pack_plan
           and "hashpartitioning(bucket" in pack_plan)
 
-    with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
-        f.write("# Physical plans (explain 'formatted')\n\n")
-        f.write("Checks:\n" + "\n".join(checks) + "\n\n")
-        f.write("## Parse stage (the cached template subtree)\n\n```\n")
-        f.write(templates_plan[:8000])
-        f.write("\n```\n\n## Flagship KG pipeline -> triples\n\n```\n")
-        f.write(triples_plan[:20000])
-        f.write("\n```\n\n## q1_pricing_summary\n\n```\n")
-        f.write(q1_plan[:8000])
-        f.write("\n```\n\n## dedup_minhash_lsh\n\n```\n")
-        f.write(lsh_plan[:8000])
-        f.write("\n```\n\n## dedup_embedding_cosine (LSH-bucketed)\n\n```\n")
-        f.write(emb_plan[:8000])
-        f.write("\n```\n\n## similarity_topk_lsh (multi-probe)\n\n```\n")
-        f.write(ann_plan[:8000])
-        f.write("\n```\n\n## similarity_topk_ivf_kmeans (trained centroids)\n\n```\n")
-        f.write(ivfk_plan[:8000])
-        f.write("\n```\n\n## dedup_clusters (connected components, final round)\n\n```\n")
-        f.write(clus_plan[:8000])
-        f.write("\n```\n\n## quality_repetition (row-local, zero shuffle)\n\n```\n")
-        f.write(rep_plan[:6000])
-        f.write("\n```\n\n## decontam_ngram (broadcast probe, final AQE plan)\n\n```\n")
-        f.write(dec_plan[:8000])
-        f.write("\n```\n\n## pack_sequences (per-bucket lane window)\n\n```\n")
-        f.write(pack_plan[:6000])
-        f.write("\n```\n")
+    md = io.StringIO()
+    md.write("# Physical plans (explain 'formatted')\n\n")
+    md.write("Checks:\n" + "\n".join(checks) + "\n\n")
+    md.write("## Parse stage (the cached template subtree)\n\n```\n")
+    md.write(templates_plan[:8000])
+    md.write("\n```\n\n## Flagship KG pipeline -> triples\n\n```\n")
+    md.write(triples_plan[:20000])
+    md.write("\n```\n\n## q1_pricing_summary\n\n```\n")
+    md.write(q1_plan[:8000])
+    md.write("\n```\n\n## dedup_minhash_lsh\n\n```\n")
+    md.write(lsh_plan[:8000])
+    md.write("\n```\n\n## dedup_embedding_cosine (LSH-bucketed)\n\n```\n")
+    md.write(emb_plan[:8000])
+    md.write("\n```\n\n## similarity_topk_lsh (multi-probe)\n\n```\n")
+    md.write(ann_plan[:8000])
+    md.write("\n```\n\n## similarity_topk_ivf_kmeans (trained centroids)\n\n```\n")
+    md.write(ivfk_plan[:8000])
+    md.write("\n```\n\n## dedup_clusters (connected components, final round)\n\n```\n")
+    md.write(clus_plan[:8000])
+    md.write("\n```\n\n## quality_repetition (row-local, zero shuffle)\n\n```\n")
+    md.write(rep_plan[:6000])
+    md.write("\n```\n\n## decontam_ngram (broadcast probe, final AQE plan)\n\n```\n")
+    md.write(dec_plan[:8000])
+    md.write("\n```\n\n## pack_sequences (per-bucket lane window)\n\n```\n")
+    md.write(pack_plan[:6000])
+    md.write("\n```\n")
     print("\n".join(checks))
+    # the fixture dir first: it may sit under the repo or the sf dir
+    text = md.getvalue()
+    for path, tag in ((base, "<fixtures>"), (sf, "<sf>"), (REPO, "<repo>")):
+        text = text.replace(path.rstrip("/"), tag)
+    return text
 
 
 if __name__ == "__main__":

@@ -25,7 +25,6 @@ from pywdcollections_spark.functions.coerce import (
     positional_coordinates,
 )
 from pywdcollections_spark.functions.text_extract import extract_text_series
-from pywdcollections_spark.functions.wikitemplates import parse_templates_series
 
 TEMPLATES_TYPE = T.ArrayType(T.StructType([
     T.StructField("name", T.StringType()),
@@ -39,11 +38,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(TEMPLATES_TYPE)
-def parse_templates_udf(texts: pd.Series) -> pd.Series:
-    return parse_templates_series(texts)
-
-
-@F.pandas_udf(TEMPLATES_TYPE)
 def extract_and_parse_udf(html: pd.Series) -> pd.Series:
     """Fused html -> templates: one Arrow crossing instead of two (the
     intermediate wikitext — KBs per page — never round-trips)."""
@@ -52,14 +46,13 @@ def extract_and_parse_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda h: parse_templates(extract_text(h)))
 
 
-# Both parse UDFs ARE deterministic, but are marked nondeterministic to
+# The parse UDF IS deterministic, but is marked nondeterministic to
 # stop InferFiltersFromGenerate duplicating the Python crossing: the
 # inferred `size(templates)>0` filter below the posexplode otherwise
 # re-evaluates the UDF, doubling the dominant cost of the whole
 # pipeline (measured: two stacked ArrowEvalPython nodes per page scan
-# in BENCH/PLANS.md before this). No correctness impact — the columns
-# only ever feed a projection + explode.
-parse_templates_udf = parse_templates_udf.asNondeterministic()
+# in BENCH/PLANS.md before this). No correctness impact — the column
+# only ever feeds a projection + explode.
 extract_and_parse_udf = extract_and_parse_udf.asNondeterministic()
 
 

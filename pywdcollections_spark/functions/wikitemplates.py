@@ -28,9 +28,6 @@ pandas UDFs (pywdcollections_spark.operators.parse).
 
 from __future__ import annotations
 
-import pandas as pd
-
-
 import re
 
 _TOKEN_SPLIT = re.compile(r"\{\{|\}\}|\[\[|\]\]|\|")
@@ -130,7 +127,3 @@ def parse_templates(text: str | None) -> list[dict]:
         named = [p for p in parts[1:] if _has_top_level_eq(p)]
         out.append({"name": name, "params": positional + named})
     return out
-
-
-def parse_templates_series(texts: pd.Series) -> pd.Series:
-    return texts.map(parse_templates)

@@ -40,13 +40,6 @@ from pywdcollections_spark.config import CollectionConfig
 from pywdcollections_spark.plans.sync import commit_entities
 from pywdcollections_spark.sources.sinks import ParquetUpsertSink
 
-#: dims build_kg unconditionally joins; read_dims() omits absent
-#: tables, so missing ones must fail loudly here, not as a KeyError
-#: three stages into the plan
-REQUIRED_DIMS = ["sitelinks", "redirects", "template_redirects",
-                 "target_p31", "class_p279", "items", "sources",
-                 "entities_seed", "commons_categories"]
-
 
 def load_config(spec: str) -> CollectionConfig:
     """``module.path:factory`` -> CollectionConfig."""
@@ -97,10 +90,10 @@ def build_parser() -> argparse.ArgumentParser:
                         "write; pays off from ~3 commit units; skip "
                         "when the input is already bucket-partitioned)")
     p.add_argument("--n-partitions", type=int, default=None,
-                   help="parse-stage partition count (default: "
-                        "spark.default.parallelism)")
-    p.add_argument("--no-html", action="store_true",
-                   help="parse the text column only (html absent/opaque)")
+                   help="repartition the parsed template rows by url "
+                        "hash into this many partitions (default: no "
+                        "repartition; the parse keeps the scan's "
+                        "partitioning)")
     p.add_argument("--entities", action="store_true",
                    help="after the triples commit, promote winners into "
                         "the wide entity table at <out>/entities through "
@@ -124,10 +117,6 @@ def main(argv: list[str] | None = None) -> dict:
 
     pages = read_pages(spark, args.pages, fmt=args.pages_format)
     dims = read_dims(spark, args.dims_dir)
-    missing = [d for d in REQUIRED_DIMS if d not in dims]
-    if missing:
-        raise SystemExit(f"missing required dim tables under "
-                         f"{args.dims_dir}: {', '.join(missing)}")
 
     config = load_config(args.config)
     summary = run_with_checkpoint(
@@ -135,7 +124,7 @@ def main(argv: list[str] | None = None) -> dict:
         n_buckets=args.n_buckets, bucket_groups=args.bucket_groups,
         pages_per_group=args.pages_per_group,
         stage_input=args.stage_input,
-        n_partitions=args.n_partitions, use_html=not args.no_html)
+        n_partitions=args.n_partitions)
     summary = {"out": args.out, "config": config.name, **summary}
 
     if args.entities:

@@ -1,11 +1,13 @@
 """Parse stage: pages scan -> per-template rows (SURVEY.md §3.2 step 1-2).
 
-Spark shape: repartition by url hash (explicit co-location + skew
-spreading for the downstream joins), Arrow-batched extract/parse UDFs,
-``posexplode_outer`` to template granularity (one census row per
-template-less page). The html binary column is dropped immediately
-after extraction so it never enters a shuffle (SURVEY.md §4
-column-pruning note).
+Spark shape: one fused Arrow-batched extract+parse UDF over the
+``html`` column, ``posexplode_outer`` to template granularity (one
+census row per template-less page). The html binary column is dropped
+immediately after extraction so it never enters a shuffle (SURVEY.md
+§4 column-pruning note). The parsed rows keep the scan's partitioning
+unless the caller passes ``n_partitions``: then, and only then, they
+are repartitioned by url hash. The job's ``--n-partitions`` defaults to
+no repartition; bench.py passes ``defaultParallelism``.
 
 Replaces the reference's threaded page fetch + pywikibot parse
 (pywdcollections.py:275-290,344,1041-1044).
@@ -17,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pywdcollections_spark.functions.udfs import (
-    extract_and_parse_udf, extract_text_udf, parse_templates_udf)
+    extract_and_parse_udf, extract_text_udf)
 
 
 def page_identity(pages: DataFrame) -> DataFrame:
@@ -31,8 +33,8 @@ def page_identity(pages: DataFrame) -> DataFrame:
             "_", " ")})
 
 
-def extract_and_parse(pages: DataFrame, n_partitions: int | None = None,
-                      use_html: bool = True) -> DataFrame:
+def extract_and_parse(pages: DataFrame,
+                      n_partitions: int | None = None) -> DataFrame:
     """pages -> one row per template instance, plus one row for each
     page that has none.
 
@@ -46,13 +48,10 @@ def extract_and_parse(pages: DataFrame, n_partitions: int | None = None,
     downstream stages filter ``tname IS NOT NULL`` to recover the
     per-template rows.
     """
-    df = page_identity(pages)
-    if use_html:
-        # fused single Arrow crossing (extract + tokenize in one UDF)
-        df = df.withColumn("templates", extract_and_parse_udf("html"))
-    else:
-        df = df.withColumn("templates", parse_templates_udf("text"))
-    df = df.drop("html", "text")  # the wide columns stop here
+    # fused single Arrow crossing (extract + tokenize in one UDF)
+    df = (page_identity(pages)
+          .withColumn("templates", extract_and_parse_udf("html"))
+          .drop("html", "text"))  # the wide columns stop here
     out = (df
            .select("url", "warc_ts", "site", "title",
                    F.posexplode_outer("templates").alias("template_idx", "template"))

@@ -45,6 +45,10 @@ _SPECIFIC_WRITERS = {281, 373, 625, 856, 1047, 1866, 6788, 8389}
 
 KEY = ["subj", "pred", "source"]
 
+#: pointer-doubling rounds of collapse_redirect_chains: file-redirect
+#: chains of up to 2^4 = 16 hops resolve to their final title
+REDIRECT_DOUBLINGS = 4
+
 
 def dispatch_rows() -> list[dict]:
     """write_prop's dispatch order (:1061-1085): list membership first,
@@ -94,17 +98,17 @@ def melt_entity_claims(entities_seed: DataFrame) -> DataFrame:
             .filter(F.col("existing_val").isNotNull()))
 
 
-def collapse_redirect_chains(redirects: DataFrame,
-                             max_doublings: int = 4) -> DataFrame:
+def collapse_redirect_chains(redirects: DataFrame) -> DataFrame:
     """(from_title, to_title) chains -> (from_title, final to_title)
-    via pointer doubling: k rounds resolve chains up to 2^k hops, each
-    round ONE dim-sized equi self-join (the set-based analogue of the
-    reference's recursive FilePage following, pywdcollections.py:
-    977-981). Cycles simply stop resolving — the row keeps the last
-    reached title (the reference would recurse forever)."""
+    via pointer doubling: k = ``REDIRECT_DOUBLINGS`` rounds resolve
+    chains up to 2^k hops, each round ONE dim-sized equi self-join (the
+    set-based analogue of the reference's recursive FilePage following,
+    pywdcollections.py:977-981). Cycles simply stop resolving — the
+    row keeps the last reached title (the reference would recurse
+    forever)."""
     r = redirects.select(F.col("from_title").alias("src"),
                          F.col("to_title").alias("dst"))
-    for _ in range(max_doublings):
+    for _ in range(REDIRECT_DOUBLINGS):
         hop = r.select(F.col("src").alias("h_src"), F.col("dst").alias("h_dst"))
         r = (r.join(hop, r["dst"] == hop["h_src"], "left")
              .select("src", F.coalesce("h_dst", "dst").alias("dst")))
@@ -114,16 +118,20 @@ def collapse_redirect_chains(redirects: DataFrame,
 
 def validate(staged: DataFrame, rules: DataFrame, entities_seed: DataFrame,
              items: DataFrame, classes: DataFrame,
-             commons_categories: DataFrame,
-             commons_redirects: DataFrame | None = None,
-             commons_files: DataFrame | None = None,
-             file_redirects: DataFrame | None = None) -> DataFrame:
+             commons_categories: DataFrame, commons_redirects: DataFrame,
+             commons_files: DataFrame, file_redirects: DataFrame) -> DataFrame:
     """-> staged columns + family, valid, reject_reason, obj_norm.
 
     ``rules`` is ``dispatch_table`` and ``classes`` is
     ``linking.target_classes`` output: the same frames linking reads,
     so link time and the item writer check one rule table against one
-    class set (the reference's one check_constraints, :1017-1039)."""
+    class set (the reference's one check_constraints, :1017-1039).
+
+    The four Commons dims are required, as the reference always asks
+    Commons: a category resolves one redirect hop and must exist in
+    ``commons_categories``; a file follows ``file_redirects`` chains
+    and must exist in ``commons_files``. An empty redirect dim means
+    "no redirects"; nothing is assumed to exist."""
     # no broadcast hints: AQE auto-broadcasts the dims (see linking.py note)
     df = staged.join(rules, "pred", "left")
 
@@ -172,21 +180,18 @@ def validate(staged: DataFrame, rules: DataFrame, entities_seed: DataFrame,
 
     df = df.withColumns({"clean_img": clean_img, "clean_cat": clean_cat})
     # one-hop category-redirect resolution (:966-967): the resolved
-    # title feeds both the exists check and the claim target
-    if commons_redirects is not None:
-        # exactly ONE target per from_title: the reference's per-title
-        # redirect cache can only hold one mapping (pywikibot
-        # getCategoryRedirectTarget), so a dim carrying two targets for
-        # one title must not fan staged rows out — min(to_title) is the
-        # deterministic pick
-        redir = (commons_redirects
-                 .groupBy(F.col("from_title").alias("r_from"))
-                 .agg(F.min("to_title").alias("r_to")))
-        cols = df.columns
-        df = (df.join(redir, df["clean_cat"] == redir["r_from"], "left")
-                .select(*cols, F.coalesce("r_to", "clean_cat").alias("resolved_cat")))
-    else:
-        df = df.withColumn("resolved_cat", F.col("clean_cat"))
+    # title feeds both the exists check and the claim target. Exactly
+    # ONE target per from_title: the reference's per-title redirect
+    # cache can only hold one mapping (pywikibot
+    # getCategoryRedirectTarget), so a dim carrying two targets for one
+    # title must not fan staged rows out — min(to_title) is the
+    # deterministic pick
+    redir = (commons_redirects
+             .groupBy(F.col("from_title").alias("r_from"))
+             .agg(F.min("to_title").alias("r_to")))
+    cols = df.columns
+    df = (df.join(redir, df["clean_cat"] == redir["r_from"], "left")
+            .select(*cols, F.coalesce("r_to", "clean_cat").alias("resolved_cat")))
     cats = (commons_categories.select(F.col("title").alias("cat_title"))
             .distinct().withColumn("cat_exists", F.lit(True)))
     cols = df.columns
@@ -194,28 +199,20 @@ def validate(staged: DataFrame, rules: DataFrame, entities_seed: DataFrame,
             .select(*cols, F.coalesce("cat_exists", F.lit(False)).alias("cat_exists")))
 
     # file-page redirect following (RECURSIVE, :977-981) + existence
-    # check (:1164); without the dims, existence is assumed (the
-    # pre-r3 behavior, kept for callers without a files dim)
-    if file_redirects is not None:
-        # one resolved target per source title (same fan-out guard as
-        # the category-redirect dim above)
-        fredir = (collapse_redirect_chains(file_redirects)
-                  .groupBy(F.col("from_title").alias("f_from"))
-                  .agg(F.min("to_title").alias("f_to")))
-        cols = df.columns
-        df = (df.join(fredir, df["clean_img"] == fredir["f_from"], "left")
-                .select(*cols, F.coalesce("f_to", "clean_img").alias("resolved_img")))
-    else:
-        df = df.withColumn("resolved_img", F.col("clean_img"))
-    if commons_files is not None:
-        fdim = (commons_files.select(F.col("title").alias("file_title"))
-                .distinct().withColumn("file_exists", F.lit(True)))
-        cols = df.columns
-        df = (df.join(fdim, df["resolved_img"] == fdim["file_title"], "left")
-                .select(*cols,
-                        F.coalesce("file_exists", F.lit(False)).alias("file_exists")))
-    else:
-        df = df.withColumn("file_exists", F.lit(True))
+    # check (:1164); one resolved target per source title (same fan-out
+    # guard as the category-redirect dim above)
+    fredir = (collapse_redirect_chains(file_redirects)
+              .groupBy(F.col("from_title").alias("f_from"))
+              .agg(F.min("to_title").alias("f_to")))
+    cols = df.columns
+    df = (df.join(fredir, df["clean_img"] == fredir["f_from"], "left")
+            .select(*cols, F.coalesce("f_to", "clean_img").alias("resolved_img")))
+    fdim = (commons_files.select(F.col("title").alias("file_title"))
+            .distinct().withColumn("file_exists", F.lit(True)))
+    cols = df.columns
+    df = (df.join(fdim, df["resolved_img"] == fdim["file_title"], "left")
+            .select(*cols,
+                    F.coalesce("file_exists", F.lit(False)).alias("file_exists")))
 
     # UDF inputs are NULL-gated by family: a when() OUTSIDE a UDF does
     # not stop the ArrowEvalPython node evaluating it for every row, so

@@ -150,8 +150,7 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
                         bucket_groups: int | None = None,
                         pages_per_group: int = 500_000,
                         stage_input: bool = False,
-                        n_partitions: int | None = None,
-                        use_html: bool = True) -> dict:
+                        n_partitions: int | None = None) -> dict:
     """Process pages in ``bucket_groups`` commit units (each covering
     n_buckets/bucket_groups url-hash buckets). ``bucket_groups=None``
     (default) sizes the commit units to the INPUT: enough groups that
@@ -203,7 +202,7 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
             continue
         subset = pages_b.filter(F.col("bucket").isin(todo))
         out = build_kg(spark, subset.drop("bucket"), config, dims,
-                       n_partitions=n_partitions, use_html=use_html)
+                       n_partitions=n_partitions)
         # validated fans out into triples, rejects and lineage: one
         # barrier, flat columns -> in-memory columnar cache with disk
         # spill. out["triples"] and out["rejects"], derived before this

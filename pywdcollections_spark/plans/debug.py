@@ -32,7 +32,7 @@ STAGES = ("templates", "candidates", "linked", "staged", "validated")
 def debug_page(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
                dims: dict[str, DataFrame], url: str | None = None,
                site: str | None = None, title: str | None = None,
-               use_html: bool = True, verbose: bool = False) -> dict[str, list]:
+               verbose: bool = False) -> dict[str, list]:
     """Run build_kg for ONE page; returns {stage -> [Row, ...]} for
     stages page/templates/candidates/linked/staged/validated. Select
     the page by ``url`` or by (``site``, ``title``) — the reference's
@@ -50,7 +50,7 @@ def debug_page(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
                .drop("site", "title")
 
     out: dict[str, list] = {"page": one.drop("html").collect()}
-    kg = build_kg(spark, one, config, dims, use_html=use_html)
+    kg = build_kg(spark, one, config, dims)
     try:
         out.update({stage: kg[stage].collect() for stage in STAGES})
     finally:

@@ -1,10 +1,11 @@
 """End-to-end KG-construction pipeline (SURVEY.md §3.2 flagship job).
 
-pages scan -> repartition(url-hash) -> extract_text -> parse_templates
--> outer explode -> left subject join (J1) -> persisted page census ->
-template_map broadcast join -> coercions -> entity linking (J4/J5/J6)
--> last-wins canonicalization (A5; map-side-combined max_by —
-operators/canonicalize.py) -> validation (§2.8) -> triples + rejects.
+pages scan -> fused extract+parse UDF -> outer explode (-> url-hash
+repartition only when ``n_partitions`` is given) -> left subject join
+(J1) -> persisted page census -> template_map broadcast join ->
+coercions -> entity linking (J4/J5/J6) -> last-wins canonicalization
+(A5; map-side-combined max_by — operators/canonicalize.py) ->
+validation (§2.8) -> triples + rejects.
 
 One linear declarative plan, built one way; Catalyst handles
 pushdown/pruning, AQE handles runtime coalescing and join skew. The
@@ -28,8 +29,8 @@ from pywdcollections_spark.operators import validate as V
 
 
 def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
-             dims: dict[str, DataFrame], n_partitions: int | None = None,
-             use_html: bool = True) -> dict[str, DataFrame]:
+             dims: dict[str, DataFrame],
+             n_partitions: int | None = None) -> dict[str, DataFrame]:
     """Full pipeline. Returns:
 
     - ``templates``: the persisted parse in PAGE-CENSUS form — an outer
@@ -58,8 +59,7 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     pywdcollections.py:476-498,416-434) is not part of the result:
     callers that need it run ``operators.promote.promote_to_entities``
     over the triples they read or committed."""
-    templates = P.extract_and_parse(pages, n_partitions=n_partitions,
-                                    use_html=use_html)
+    templates = P.extract_and_parse(pages, n_partitions=n_partitions)
     templates = P.resolve_subjects(templates, dims["sitelinks"])
     # template rows are small (html/text already dropped at the parse
     # stage). DISK_ONLY because templates carries the params ARRAY
@@ -88,9 +88,8 @@ def build_kg(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     staged = C.canonicalize(linked)
     validated = V.validate(staged, rules, dims["entities_seed"], dims["items"],
                            classes, dims["commons_categories"],
-                           dims.get("commons_redirects"),
-                           dims.get("commons_files"),
-                           dims.get("file_redirects"))
+                           dims["commons_redirects"], dims["commons_files"],
+                           dims["file_redirects"])
     src = dims["sources"].select(F.col("site").alias("source"), "site_qid")
     triples = (validated.filter("valid")
                .join(src, "source", "left")   # provenance P143 analogue (:993-1009)

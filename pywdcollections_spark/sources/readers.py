@@ -38,7 +38,9 @@ _JSONL_SCHEMA = T.StructType([
 
 #: contract schemas for the dimension tables the pipeline joins
 #: against (sitelinks / redirects / class closure / commons existence
-#: dims — SURVEY.md §2.3). Supplying them at read time skips parquet
+#: dims — SURVEY.md §2.3), and the package's one list of dim names:
+#: read_dims requires every table, and the fixture builders type each
+#: table with its entry here. Supplying them at read time skips parquet
 #: footer schema-inference, which is one driver-blocking job PER table
 #: per session (measured ~4 s of zero-task preamble across the 12 dims
 #: + pages at bench scale); at production scale the Iceberg catalog
@@ -62,15 +64,18 @@ DIM_SCHEMAS: dict[str, object] = {
 
 
 def read_dims(spark: SparkSession, dims_dir: str) -> dict[str, DataFrame]:
-    """Load the dimension tables from ``dims_dir/dim_<name>.parquet``
-    with their contract schemas (inference only where the schema is
-    config-dependent). ``dims_dir`` is a local path or any URI Spark
-    reads (``file://``, ``hdfs://``, ``s3a://``). The redirect/file dims
-    are optional — a table whose path does not exist is simply omitted
-    and the pipeline skips those checks, mirroring a deployment that has
-    not mirrored commons. Any other read error propagates (the same
+    """Load every table of ``DIM_SCHEMAS`` from
+    ``dims_dir/dim_<name>.parquet`` with its contract schema (inference
+    only where the schema is config-dependent). ``dims_dir`` is a local
+    path or any URI Spark reads (``file://``, ``hdfs://``, ``s3a://``).
+
+    All 12 tables are required: a deployment with no category or file
+    redirects supplies an empty table. A table whose path does not
+    exist is missing, and one ``ValueError`` names every missing table
+    before any plan is built. Any other read error propagates (the same
     rule as ``UpsertSink.read_if_exists``)."""
     out: dict[str, DataFrame] = {}
+    missing: list[str] = []
     for name, sch in DIM_SCHEMAS.items():
         path = f"{dims_dir.rstrip('/')}/dim_{name}.parquet"
         reader = spark.read if sch is None else spark.read.schema(sch)
@@ -79,6 +84,10 @@ def read_dims(spark: SparkSession, dims_dir: str) -> dict[str, DataFrame]:
         except AnalysisException as e:
             if not path_not_found(e):
                 raise
+            missing.append(name)
+    if missing:
+        raise ValueError(f"missing dim tables under {dims_dir}: "
+                         f"{', '.join(missing)}")
     return out
 
 

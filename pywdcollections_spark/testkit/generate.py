@@ -558,66 +558,67 @@ def small_dim_rows(n_pages: int, seed: int) -> dict[str, list[dict]]:
     }
 
 
+def page_dim_rows(seed: int, i: int) -> dict[str, list[dict]]:
+    """Page i's rows of the page-derived dim tables (the O(n_pages)
+    part of ``dim_rows``), keyed by dim name. Each page derives from
+    (seed, i) alone, so the fixture builders can generate these rows
+    distributed as well as in one driver loop."""
+    lang = page_lang(seed, i)
+    title = page_title(i, lang)
+    qid = entity_qid(i)
+
+    rng = random.Random(f"{seed}:seed_entity:{i}")
+    entity = {"qid": qid, "last_modified": EPOCH,
+              "P17": None, "P18": None, "P131": None, "P154": None,
+              "P281": None, "P373": None, "P571": None, "P625": None,
+              "P856": None, "P1866": None, "P2971": None}
+    if rng.random() < 0.3:
+        entity["P373"] = f"Existing category {i}"
+    if rng.random() < 0.2:
+        entity["P18"] = f"Existing {i}.jpg"
+    if forced_dup_image(seed, i):
+        # cross-property image dedup case (pywdcollections.py:1151-1157):
+        # the page's own candidate image title already sits under P154
+        entity["P154"] = f"{title} photo.jpg"
+
+    # the redirect page itself exists on Commons (it is a page carrying
+    # the redirect template) — resolution happens BEFORE the exists
+    # check, so source titles stay listed
+    categories = [{"title": name}
+                  for name in (f"Category of {title}", f"Catégorie de {title}", title)]
+    cat_redirects = []
+    case = cat_redirect_case(seed, i)
+    if case is not None:
+        frm, to, target_exists = case
+        cat_redirects.append({"from_title": frm, "to_title": to})
+        if target_exists:
+            categories.append({"title": to})
+    files, file_redirects = file_dim_rows(seed, i)
+    return {
+        # the harvested pages themselves are sitelinked entities (J1 join)
+        "sitelinks": [{"site": f"{lang}wiki", "title": title, "qid": qid}],
+        "items": [{"qid": qid}],
+        "entities_seed": [entity],
+        "commons_categories": categories,
+        "commons_redirects": cat_redirects,
+        "commons_files": [{"title": f} for f in files],
+        "file_redirects": file_redirects,
+    }
+
+
+def head_category_rows() -> list[dict]:
+    """Commons categories every fixture lists beyond the pages' own."""
+    return [{"title": f"Head category {t}"} for t in range(2000)]
+
+
 def dim_rows(n_pages: int, seed: int) -> dict[str, list[dict]]:
-    """All broadcast dimension tables (FIXTURES.md §2)."""
-    small = small_dim_rows(n_pages, seed)
-    sitelinks = small["sitelinks"]
-    items = small["items"]
-
-    # the harvested pages themselves are sitelinked entities (J1 join)
+    """All broadcast dimension tables (FIXTURES.md §2): the place-pool
+    dims, then every page's ``page_dim_rows`` in page order."""
+    out = small_dim_rows(n_pages, seed)
+    for name in page_dim_rows(seed, 0):     # the page-derived dim names
+        out.setdefault(name, [])
     for i in range(n_pages):
-        lang = page_lang(seed, i)
-        sitelinks.append({"site": f"{lang}wiki", "title": page_title(i, lang),
-                          "qid": entity_qid(i)})
-        items.append({"qid": entity_qid(i)})
-
-    entities_seed = []
-    for i in range(n_pages):
-        rng = random.Random(f"{seed}:seed_entity:{i}")
-        row = {"qid": entity_qid(i), "last_modified": EPOCH,
-               "P17": None, "P18": None, "P131": None, "P154": None,
-               "P281": None, "P373": None, "P571": None, "P625": None,
-               "P856": None, "P1866": None, "P2971": None}
-        if rng.random() < 0.3:
-            row["P373"] = f"Existing category {i}"
-        if rng.random() < 0.2:
-            row["P18"] = f"Existing {i}.jpg"
-        if forced_dup_image(seed, i):
-            # cross-property image dedup case (pywdcollections.py:1151-1157):
-            # the page's own candidate image title already sits under P154
-            row["P154"] = f"{page_title(i, page_lang(seed, i))} photo.jpg"
-        entities_seed.append(row)
-
-    commons_categories = []
-    commons_redirects = []
-    commons_files = []
-    file_redirects = []
-    for i in range(n_pages):
-        lang = page_lang(seed, i)
-        t = page_title(i, lang)
-        # the redirect page itself exists on Commons (it is a page
-        # carrying the redirect template) — resolution happens BEFORE
-        # the exists check, so source titles stay listed
-        for name in (f"Category of {t}", f"Catégorie de {t}", t):
-            commons_categories.append({"title": name})
-        case = cat_redirect_case(seed, i)
-        if case is not None:
-            frm, to, target_exists = case
-            commons_redirects.append({"from_title": frm, "to_title": to})
-            if target_exists:
-                commons_categories.append({"title": to})
-        fs, fr = file_dim_rows(seed, i)
-        commons_files.extend({"title": f} for f in fs)
-        file_redirects.extend(fr)
-    for t in range(2000):
-        commons_categories.append({"title": f"Head category {t}"})
-
-    out = dict(small)
-    out["sitelinks"] = sitelinks
-    out["items"] = items
-    out["entities_seed"] = entities_seed
-    out["commons_categories"] = commons_categories
-    out["commons_redirects"] = commons_redirects
-    out["commons_files"] = commons_files
-    out["file_redirects"] = file_redirects
+        for name, rows in page_dim_rows(seed, i).items():
+            out[name].extend(rows)
+    out["commons_categories"].extend(head_category_rows())
     return out

@@ -101,14 +101,25 @@ def test_job_entities_and_sync_cycle_commit_identically(spark, data_dirs, tmp_pa
 
 
 def test_job_missing_required_dim_fails_loudly(spark, data_dirs, tmp_path):
+    """Every dim is required: a dims dir missing any table fails in
+    read_dims, before a plan is built or an output written, with one
+    error naming every missing table. Without commons_files the job
+    would otherwise commit the file_missing rejects as valid triples."""
+    import re
     import shutil
     pages_path, dims_dir = data_dirs
-    broken = str(tmp_path / "dims_broken")
-    shutil.copytree(dims_dir, broken)
-    shutil.rmtree(os.path.join(broken, "dim_sitelinks.parquet"))
-    with pytest.raises(SystemExit, match="sitelinks"):
-        J.main(["--pages", pages_path, "--dims-dir", broken,
-                "--out", str(tmp_path / "out")])
+    for names in (["sitelinks"], ["commons_files"],
+                  ["commons_files", "file_redirects"]):
+        tag = "_".join(names)
+        broken = str(tmp_path / f"dims_no_{tag}")
+        shutil.copytree(dims_dir, broken)
+        for name in names:
+            shutil.rmtree(os.path.join(broken, f"dim_{name}.parquet"))
+        out = str(tmp_path / f"out_no_{tag}")
+        with pytest.raises(ValueError, match=re.escape(
+                f"missing dim tables under {broken}: {', '.join(names)}")):
+            J.main(["--pages", pages_path, "--dims-dir", broken, "--out", out])
+        assert not os.path.exists(out), names
 
 
 def test_read_dims_contract_schemas(spark, data_dirs):
@@ -117,12 +128,10 @@ def test_read_dims_contract_schemas(spark, data_dirs):
     # tables) read the same tables
     for where in (dims_dir, pathlib.Path(dims_dir).as_uri()):
         dims = read_dims(spark, where)
-        assert set(J.REQUIRED_DIMS) <= set(dims), where
+        assert set(dims) == set(DIM_SCHEMAS), where
         # contract schema applied verbatim where declared
         assert [f.name for f in dims["sitelinks"].schema] == ["site", "title", "qid"]
         assert dict(dims["target_p31"].dtypes)["p31"] == "bigint"
-        # optional commons dims present in the fixture set
-        assert "commons_redirects" in dims and "file_redirects" in dims
     # every declared contract name round-trips (entities_seed inferred)
     assert DIM_SCHEMAS["entities_seed"] is None
 

@@ -76,8 +76,9 @@ def test_closure_descendants(spark):
 
 def test_seed_filter(spark):
     entities = spark.createDataFrame(
-        [("Q100", "Q600000"), ("Q101", "Q600000"), ("Q102", None)],
-        "qid string, P17 string")
+        [("Q100", "Q600000", "Q20"), ("Q101", "Q600000", "Q99"),
+         ("Q102", None, None)],
+        "qid string, P17 string, P31 string")
     p31 = spark.createDataFrame(
         [("Q100", 20), ("Q101", 99), ("Q102", 30)], "qid string, p31 long")
     edges = spark.createDataFrame([(20, 10), (30, 20)], "sub_qid long, super_qid long")
@@ -87,6 +88,11 @@ def test_seed_filter(spark):
     got2 = sorted(r["qid"] for r in
                   seed_filter(entities, p31, edges, 10, country=600000).collect())
     assert got2 == ["Q100"]
+    # excluded types (pywdcollections.py:76-97): an entity whose P31 is
+    # excluded drops out; one whose P31 is null stays
+    got3 = sorted(r["qid"] for r in
+                  seed_filter(entities, p31, edges, 10, excluded_types=[20]).collect())
+    assert got3 == ["Q102"]
 
 
 def test_merge_labels_both_flags(spark):
