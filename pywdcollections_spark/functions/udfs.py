@@ -117,7 +117,13 @@ def int_parse_ok_udf(vals: pd.Series) -> pd.Series:
     return vals.map(ok)
 
 
+#: the 29 code points where Python's ``str.isspace()`` holds, as a Java
+#: regex class: Java's ``\s`` covers only 6 of them and Spark's
+#: ``trim()`` only U+0020
+_PY_SPACE = r"[\t-\r\x1C-\x20\x85\xA0\u1680\u2000-\u200A\u2028\u2029\u202F\u205F\u3000]"
+
+
 def python_trim(col):
-    """Python str.strip() parity (all whitespace, not just spaces —
-    Spark's trim() strips ' ' only)."""
-    return F.regexp_replace(col, r"^\s+|\s+$", "")
+    """Python ``str.strip()`` parity: strips all 29 whitespace code
+    points from both ends."""
+    return F.regexp_replace(col, f"^{_PY_SPACE}+|{_PY_SPACE}+$", "")

@@ -75,25 +75,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--bucket-groups", type=int, default=None,
                    help="commit units per run (buckets per commit = "
                         "n-buckets / bucket-groups). Default: auto — "
-                        "sized so each commit covers ~--pages-per-group "
-                        "pages (small inputs run as ONE commit; commit "
-                        "overhead is a per-group constant, see "
-                        "plans/checkpoint.py)")
-    p.add_argument("--pages-per-group", type=int, default=500_000,
-                   help="auto bucket-groups target: pages per commit "
-                        "unit (ignored when --bucket-groups is set)")
-    p.add_argument("--stage-input", action="store_true",
-                   help="pre-bucket the pages table once into a "
-                        "bucket-partitioned staging table so each "
-                        "commit unit partition-prunes its scan instead "
-                        "of re-reading the full input (one extra full "
-                        "write; pays off from ~3 commit units; skip "
-                        "when the input is already bucket-partitioned)")
-    p.add_argument("--n-partitions", type=int, default=None,
-                   help="repartition the parsed template rows by url "
-                        "hash into this many partitions (default: no "
-                        "repartition; the parse keeps the scan's "
-                        "partitioning)")
+                        "sized so each commit covers ~500,000 pages "
+                        "(checkpoint.PAGES_PER_GROUP; small inputs run "
+                        "as ONE commit; commit overhead is a per-group "
+                        "constant, see plans/checkpoint.py)")
     p.add_argument("--entities", action="store_true",
                    help="after the triples commit, promote winners into "
                         "the wide entity table at <out>/entities through "
@@ -121,10 +106,7 @@ def main(argv: list[str] | None = None) -> dict:
     config = load_config(args.config)
     summary = run_with_checkpoint(
         spark, pages, config, dims, out_dir=args.out,
-        n_buckets=args.n_buckets, bucket_groups=args.bucket_groups,
-        pages_per_group=args.pages_per_group,
-        stage_input=args.stage_input,
-        n_partitions=args.n_partitions)
+        n_buckets=args.n_buckets, bucket_groups=args.bucket_groups)
     summary = {"out": args.out, "config": config.name, **summary}
 
     if args.entities:

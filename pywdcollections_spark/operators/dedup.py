@@ -3,8 +3,6 @@
 Strategies over a document table, each a declarative DataFrame plan
 designed for the 100 TB shape:
 
- * exact                 — md5 groupBy (map-side partial agg; no skew
-                           issue because the hash key is uniform)
  * minhash_lsh           — shingle -> k minhashes -> bands -> bucket
                            join carrying KEYS ONLY; candidates verified
                            with exact Jaccard; hot buckets cappable.
@@ -30,19 +28,6 @@ from pywdcollections_spark.operators.textops import (
     word_shingles,
     words,
 )
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One row per duplicated content hash: canonical (min) id, the
-    duplicate count, and the sorted member ids as csv."""
-    return (df
-            .withColumn("content_md5", F.md5(F.col(text_col)))
-            .groupBy("content_md5")
-            .agg(F.min(id_col).alias("canonical_id"),
-                 F.count("*").alias("n_dups"),
-                 F.concat_ws(",", F.sort_array(F.collect_list(F.col(id_col))))
-                  .alias("member_ids"))
-            .filter(F.col("n_dups") > 1))
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -108,7 +93,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     ``max_bucket_size`` drops band buckets holding more docs than the
     cap from candidate generation (a bucket of B docs yields B²/2
     pairs; a corpus with a large exact-duplicate group floods every
-    band). Run exact_duplicates FIRST and near-dup only the distinct
+    band). Drop exact duplicates FIRST (keyed by the md5 of the text,
+    as the dedup_exact query keys them) and near-dup only the distinct
     survivors — then a bucket over the cap signals residual skew worth
     dropping, at a bounded recall cost the caller opts into."""
     rows = k // bands

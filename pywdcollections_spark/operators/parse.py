@@ -6,8 +6,8 @@ census row per template-less page). The html binary column is dropped
 immediately after extraction so it never enters a shuffle (SURVEY.md
 §4 column-pruning note). The parsed rows keep the scan's partitioning
 unless the caller passes ``n_partitions``: then, and only then, they
-are repartitioned by url hash. The job's ``--n-partitions`` defaults to
-no repartition; bench.py passes ``defaultParallelism``.
+are repartitioned by url hash (bench.py passes ``defaultParallelism``;
+the job passes none).
 
 Replaces the reference's threaded page fetch + pywikibot parse
 (pywdcollections.py:275-290,344,1041-1044).

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from pywdcollections_spark import registry
 from pywdcollections_spark.functions.udfs import (
-    coord_parse_udf, int_parse_ok_udf, url_normalize_udf)
+    coord_parse_udf, int_parse_ok_udf, python_trim, url_normalize_udf)
 from pywdcollections_spark.localtable import local_table
 
 _SPECIFIC_WRITERS = {281, 373, 625, 856, 1047, 1866, 6788, 8389}
@@ -172,10 +172,11 @@ def validate(staged: DataFrame, rules: DataFrame, entities_seed: DataFrame,
                     F.coalesce(F.arrays_overlap("constraints", "classes"),
                                F.lit(False)).alias("hop_pass")))
 
-    # image/category title cleanup (:1158, :1212) — chained replaces
-    clean_img = F.regexp_replace(F.trim(F.regexp_replace(
+    # image/category title cleanup (:1158, :1212) — chained replaces,
+    # with the reference's str.strip()
+    clean_img = F.regexp_replace(python_trim(F.regexp_replace(
         F.regexp_replace("obj_raw", r"File:", ""), r"file:", "")), r"::", ":")
-    clean_cat_s1 = F.trim(F.regexp_replace(F.regexp_replace("obj_raw", r"Category:", ""), r"category:", ""))
+    clean_cat_s1 = python_trim(F.regexp_replace(F.regexp_replace("obj_raw", r"Category:", ""), r"category:", ""))
     clean_cat = F.translate(F.regexp_replace(clean_cat_s1, r"::", ":"), "{}[]", "")
 
     df = df.withColumns({"clean_img": clean_img, "clean_cat": clean_cat})

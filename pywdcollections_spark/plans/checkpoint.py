@@ -36,6 +36,11 @@ from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
 from pywdcollections_spark.sources.sinks import path_not_found
 
 
+#: auto grouping's target commit-unit size: ``bucket_groups=None``
+#: runs ceil(pages / PAGES_PER_GROUP) groups, clamped to [1, n_buckets]
+PAGES_PER_GROUP = 500_000
+
+
 def bucket_col(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets))
 
@@ -49,10 +54,9 @@ def completed_buckets(spark: SparkSession, out_dir: str, n_buckets: int) -> list
     lineage write) read as empty rather than fail schema inference.
 
     Raises ValueError when a committed row was written under another
-    ``n_buckets``: its bucket ids hash a different url split, so
-    resuming would append overlapping partitions. Rows with a null
-    ``n_buckets`` (lineage written before the column existed) are
-    accepted."""
+    ``n_buckets``, or under none (a null ``n_buckets``, as in lineage
+    written before the column existed): its bucket ids hash an unknown
+    url split, so resuming would append overlapping partitions."""
     lineage_path = os.path.join(out_dir, "lineage")
     try:
         lin = spark.read.schema("bucket long, n_buckets long").parquet(lineage_path)
@@ -61,11 +65,16 @@ def completed_buckets(spark: SparkSession, out_dir: str, n_buckets: int) -> list
             raise
         return []
     rows = lin.distinct().collect()
-    other = sorted({r["n_buckets"] for r in rows} - {n_buckets, None})
+    other = {r["n_buckets"] for r in rows} - {n_buckets}
+    if None in other:
+        raise ValueError(
+            f"{lineage_path} holds rows with a null n_buckets; their bucket "
+            f"ids cannot be matched to this run's n_buckets={n_buckets}. "
+            "Write to a fresh out_dir.")
     if other:
         raise ValueError(
             f"{lineage_path} was committed with n_buckets="
-            f"{', '.join(map(str, other))}; this run has n_buckets={n_buckets}. "
+            f"{', '.join(map(str, sorted(other)))}; this run has n_buckets={n_buckets}. "
             "Resume with the committed n_buckets or write to a fresh out_dir.")
     return sorted({r["bucket"] for r in rows})
 
@@ -88,33 +97,6 @@ def _write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
        .write.mode("overwrite")
        .option("partitionOverwriteMode", "dynamic")
        .partitionBy("bucket").parquet(path))
-
-
-def _stage_input(spark: SparkSession, pages_b: DataFrame, out_dir: str,
-                 n_buckets: int) -> DataFrame:
-    """Write the bucketed input ONCE as a bucket-partitioned staging
-    table and return a reader over it: the per-group bucket filter
-    then PRUNES partition directories instead of re-scanning the full
-    input per commit unit (measured at 3M pages / 6 groups: the
-    unstaged path costs ~one full input scan per group because the
-    url-hash predicate cannot prune an unpartitioned layout —
-    BENCH/BASELINE.md round-6). One extra full write of the corpus
-    buys G reads -> 1 read + 1 write + 1 pruned-read-total; worth it
-    from G >= 3, and unnecessary when the input is ALREADY stored
-    bucket-partitioned (point the job at it and skip staging).
-
-    Crash-safe reuse: a completed staging write carries parquet's
-    _SUCCESS marker; a kill mid-staging leaves no marker and the next
-    run rewrites it (mode=overwrite). The path holds ``n_buckets``, so
-    a table bucketed under another count is never reused. The marker
-    probe goes through the Hadoop FileSystem of ``out_dir`` (hdfs://,
-    s3a://, file:) and its errors propagate."""
-    staging = os.path.join(out_dir, "_staged_pages", f"n_buckets={n_buckets}")
-    marker = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(staging, "_SUCCESS"))
-    if not marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(marker):
-        (pages_b.repartition(n_buckets, F.col("bucket"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(staging))
-    return spark.read.parquet(staging)
 
 
 def group_lineage(spark: SparkSession, todo: list[int], templates: DataFrame,
@@ -147,14 +129,11 @@ def group_lineage(spark: SparkSession, todo: list[int], templates: DataFrame,
 def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
                         config: CollectionConfig, dims: dict[str, DataFrame],
                         out_dir: str, n_buckets: int = 16,
-                        bucket_groups: int | None = None,
-                        pages_per_group: int = 500_000,
-                        stage_input: bool = False,
-                        n_partitions: int | None = None) -> dict:
+                        bucket_groups: int | None = None) -> dict:
     """Process pages in ``bucket_groups`` commit units (each covering
     n_buckets/bucket_groups url-hash buckets). ``bucket_groups=None``
     (default) sizes the commit units to the INPUT: enough groups that
-    each covers ~``pages_per_group`` pages, so a small input runs as
+    each covers ~``PAGES_PER_GROUP`` pages, so a small input runs as
     one commit instead of paying the per-group fixed cost (plan
     re-analysis, template-cache persist, overwrite commit, lineage
     append — measured ~9 s/group at bench scale, BENCH/BASELINE.md
@@ -162,20 +141,13 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
     resume unit is the bucket, so re-running the same --out with a
     different grouping is safe: completed buckets are skipped whatever
     group they once belonged to; a different ``n_buckets`` is not
-    (``completed_buckets`` refuses it). Returns progress counters.
-
-    ``stage_input`` (opt-in): when more than one commit unit will run,
-    pre-bucket the input once into a bucket-PARTITIONED staging table
-    under out_dir so each group's filter partition-prunes instead of
-    re-scanning the whole input (see _stage_input; skip it when the
-    input is already stored bucket-partitioned)."""
+    (``completed_buckets`` refuses it). Returns progress counters."""
     if bucket_groups is None:
         # parquet row-count is footer metadata — no data scan
         n_pages = pages.count()
         bucket_groups = min(n_buckets,
-                            max(1, -(-n_pages // max(1, pages_per_group))))
+                            max(1, -(-n_pages // PAGES_PER_GROUP)))
     done = set(completed_buckets(spark, out_dir, n_buckets))
-    pages_b = pages.withColumn("bucket", bucket_col(F.col("url"), n_buckets))
     # contiguous chunks with the remainder spread over the first groups:
     # EVERY bucket must land in exactly one commit unit — a plain
     # n_buckets // bucket_groups split silently drops the last
@@ -188,21 +160,13 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
             groups.append(list(range(start, start + size)))
         start += size
 
-    # stage only when the REMAINING work spans >1 commit unit: a
-    # single-group run (or a fully-committed resume) reads the input
-    # once anyway, so staging would be pure overhead
-    n_pending = sum(1 for g in groups if any(b not in done for b in g))
-    if stage_input and n_pending > 1:
-        pages_b = _stage_input(spark, pages_b, out_dir, n_buckets)
-
     processed = 0
-    for gi, group in enumerate(groups):
+    for group in groups:
         todo = [b for b in group if b not in done]
         if not todo:
             continue
-        subset = pages_b.filter(F.col("bucket").isin(todo))
-        out = build_kg(spark, subset.drop("bucket"), config, dims,
-                       n_partitions=n_partitions)
+        subset = pages.filter(bucket_col(F.col("url"), n_buckets).isin(todo))
+        out = build_kg(spark, subset, config, dims)
         # validated fans out into triples, rejects and lineage: one
         # barrier, flat columns -> in-memory columnar cache with disk
         # spill. out["triples"] and out["rejects"], derived before this

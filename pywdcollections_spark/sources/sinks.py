@@ -7,7 +7,7 @@ so the production swap-in is a CONFIG choice, not a rewrite: both
 backends implement the same ``UpsertSink`` interface and
 ``get_sink(spark, kind=...)`` selects one.
 
- * ``ParquetUpsertSink`` — set-operation merge + partition-atomic
+ * ``ParquetUpsertSink`` — set-operation merge + whole-table
    overwrite (the portable fallback; fully tested in-sandbox).
  * ``IcebergUpsertSink`` — emits a single ``MERGE INTO`` per upsert
    (row-level merge-on-read at cluster scale; requires an Iceberg
@@ -133,73 +133,28 @@ class UpsertSink:
 
 class ParquetUpsertSink(UpsertSink):
     """Portable backend: read-merge-overwrite on a parquet directory.
-    The write unit stays partition-atomic (directory swap), matching
-    the per-bucket commit discipline of plans.checkpoint.
+    Every upsert after the first rewrites the whole table (a full
+    ``merge_last_wins``); the Iceberg backend is the row-level scale
+    path."""
 
-    When the table is partitioned and every partition column is also a
-    merge key (a key row is then confined to one partition), upsert is
-    PARTITION-PRUNED: only the partitions whose key-prefix values
-    appear in the update batch are read, merged, and dynamically
-    overwritten — untouched partition directories are never opened or
-    rewritten, so the fallback itself survives a large table (the
-    Iceberg backend remains the row-level scale path)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 partition_by: list[str] | None = None):
-        self.spark, self.path, self.partition_by = spark, path, partition_by
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark, self.path = spark, path
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
 
     def maintain(self, target_file_mb: int = 128) -> None:
-        compact_parquet(self.spark, self.path, target_file_mb, self.partition_by)
-
-    #: past this many touched partitions the pruned path would build a
-    #: Catalyst OR-chain with thousands of terms (analysis cost blows up
-    #: before any scan savings); fall back to the full merge instead
-    max_literal_partitions = 1000
+        compact_parquet(self.spark, self.path, target_file_mb)
 
     def upsert(self, updates: DataFrame, keys: list[str], order_col: str) -> None:
         existing = self.read_if_exists()
         if existing is None:
             # first write: no target yet
-            write_atomic(_dedupe_batch(updates, keys, order_col),
-                         self.path, self.partition_by)
+            write_atomic(_dedupe_batch(updates, keys, order_col), self.path)
             return
-        if self.partition_by and set(self.partition_by) <= set(keys):
-            if self._pruned_upsert(existing, updates, keys, order_col):
-                return
         merged = merge_last_wins(existing, updates, keys, order_col)
         # materialize before overwriting the path the plan reads from
-        write_atomic(merged.localCheckpoint(), self.path, self.partition_by)
-
-    def _pruned_upsert(self, existing: DataFrame, updates: DataFrame,
-                       keys: list[str], order_col: str) -> bool:
-        """Merge only the partitions named by the update batch. The
-        touched-partition list is control-plane sized (one row per
-        partition, NOT per record); the literal filter it builds is
-        what pushes directory-level partition pruning into the scan.
-        Returns False when the caller should run the full merge instead
-        (batch touches more partitions than the literal-predicate cap);
-        an EMPTY batch is a committed no-op (returns True)."""
-        from functools import reduce
-        pcols = self.partition_by
-        touched = updates.select(*pcols).distinct().collect()
-        if not touched:             # empty update batch: nothing to merge
-            return True
-        if len(touched) > self.max_literal_partitions:
-            return False            # full merge beats a 10^4-term predicate
-        one = lambda r: reduce(lambda a, b: a & b,
-                               [F.col(c).eqNullSafe(F.lit(r[c])) for c in pcols])
-        cond = reduce(lambda a, b: a | b, [one(r) for r in touched])
-        merged = merge_last_wins(existing.filter(cond), updates, keys, order_col)
-        # dynamic overwrite: only partitions present in `merged` (= the
-        # touched set) are replaced; materialize first — the plan reads
-        # the same directory it is about to rewrite
-        (merged.localCheckpoint().write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(*pcols).parquet(self.path))
-        return True
+        write_atomic(merged.localCheckpoint(), self.path)
 
 
 def iceberg_merge_sql(table: str, keys: list[str], columns: list[str],

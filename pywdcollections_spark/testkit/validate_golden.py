@@ -105,6 +105,18 @@ def _url_norm(website: str):
     return website
 
 
+def image_title(obj: str) -> str:
+    """The image writers' title cleanup (pywdcollections.py:1158)."""
+    return obj.replace("File:", "").replace("file:", "").strip().replace("::", ":")
+
+
+def category_title(obj: str) -> str:
+    """The P373 writer's title cleanup (pywdcollections.py:1212)."""
+    return (obj.replace("Category:", "").replace("category:", "")
+               .strip().replace("::", ":").replace("{", "")
+               .replace("}", "").replace("[", "").replace("]", ""))
+
+
 def expected_validation(n_pages: int, seed: int, head_templates: int = 200):
     """-> (valid_rows, reject_rows); valid rows carry obj_norm."""
     uni = _Universe(n_pages, seed)
@@ -147,7 +159,7 @@ def expected_validation(n_pages: int, seed: int, head_templates: int = 200):
                 if dup:
                     reject("image_duplicate")
                     continue
-                norm = obj.replace("File:", "").replace("file:", "").strip().replace("::", ":")
+                norm = image_title(obj)
                 if norm == "":
                     reject("empty_title")
                     continue
@@ -181,9 +193,7 @@ def expected_validation(n_pages: int, seed: int, head_templates: int = 200):
                         continue
                     norm = obj
                 elif fam == "p373":
-                    norm = (obj.replace("Category:", "").replace("category:", "")
-                               .strip().replace("::", ":").replace("{", "")
-                               .replace("}", "").replace("[", "").replace("]", ""))
+                    norm = category_title(obj)
                     if norm == "":
                         reject("empty_title")
                         continue

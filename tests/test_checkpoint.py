@@ -140,11 +140,11 @@ def test_zero_page_buckets_get_lineage_rows(spark, env, tmp_path_factory):
     assert r2["groups_processed"] == 0
 
 
-def test_auto_group_sizing(spark, env, tmp_path_factory):
+def test_auto_group_sizing(spark, env, tmp_path_factory, monkeypatch):
     """bucket_groups=None (the CLI default) sizes commit units to the
-    input: ~pages_per_group pages per commit, clamped to [1, n_buckets].
+    input: ~PAGES_PER_GROUP pages per commit, clamped to [1, n_buckets].
     Small inputs run as ONE commit (the per-group fixed cost is paid
-    once); a tiny pages_per_group forces many groups."""
+    once); a tiny PAGES_PER_GROUP forces many groups."""
     pages, dims = env
     one = str(tmp_path_factory.mktemp("auto1"))
     r1 = run_with_checkpoint(spark, pages, demo_config(), dims, one)
@@ -152,73 +152,13 @@ def test_auto_group_sizing(spark, env, tmp_path_factory):
     assert r1["buckets_done"] == r1["n_buckets"]
 
     many = str(tmp_path_factory.mktemp("auto4"))
-    r4 = run_with_checkpoint(spark, pages, demo_config(), dims, many,
-                             pages_per_group=50)   # 200 pages -> 4 groups
+    monkeypatch.setattr(checkpoint, "PAGES_PER_GROUP", 50)  # 200 pages -> 4 groups
+    r4 = run_with_checkpoint(spark, pages, demo_config(), dims, many)
     assert r4["groups_processed"] == 4
 
     a, b = _triples(spark, one), _triples(spark, many)
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_stage_input_identical_and_pruned(spark, env, tmp_path_factory):
-    """stage_input=True pre-buckets the input once into a
-    bucket-PARTITIONED staging table; outputs must be identical to the
-    unstaged run, the per-group scan must partition-prune (pushed
-    partition filter, no url-hash recompute on the scan side), resume
-    must reuse the completed staging (_SUCCESS marker), and a staging
-    dir WITHOUT the marker (kill mid-staging) must be rewritten."""
-    import os
-
-    pages, dims = env
-    plain = str(tmp_path_factory.mktemp("plain"))
-    staged = str(tmp_path_factory.mktemp("staged"))
-
-    run_with_checkpoint(spark, pages, demo_config(), dims, plain,
-                        bucket_groups=4)
-    r = run_with_checkpoint(spark, pages, demo_config(), dims, staged,
-                            bucket_groups=4, stage_input=True)
-    assert r["groups_processed"] == 4
-    staging = os.path.join(staged, "_staged_pages", "n_buckets=16")
-    assert os.path.exists(os.path.join(staging, "_SUCCESS"))
-    # partition layout: one directory per occupied bucket
-    assert any(n.startswith("bucket=") for n in os.listdir(staging))
-
-    a, b = _triples(spark, plain), _triples(spark, staged)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    # the group filter prunes the staged scan: with a partition filter
-    # on bucket, the scan's partition count at one bucket is 1 dir
-    sub = spark.read.parquet(staging).filter(F.col("bucket") == 3)
-    import io
-    from contextlib import redirect_stdout
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sub.explain("formatted")
-    assert "PartitionFilters: [isnotnull(bucket" in buf.getvalue() \
-        or "bucket = 3" in buf.getvalue()
-
-    # fully-committed resume: no pending group -> staging untouched,
-    # nothing reprocessed
-    r2 = run_with_checkpoint(spark, pages, demo_config(), dims, staged,
-                             bucket_groups=4, stage_input=True)
-    assert r2["groups_processed"] == 0
-
-    # kill-mid-staging: a partial staging dir WITHOUT _SUCCESS must be
-    # rewritten (not trusted) and the run still completes identically
-    crash = str(tmp_path_factory.mktemp("stagecrash"))
-    partial = os.path.join(crash, "_staged_pages", "n_buckets=16", "bucket=0")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "garbage.parquet"), "wb") as f:
-        f.write(b"\x00not parquet")
-    r3 = run_with_checkpoint(spark, pages, demo_config(), dims, crash,
-                             bucket_groups=4, stage_input=True)
-    assert r3["groups_processed"] == 4
-    assert os.path.exists(os.path.join(crash, "_staged_pages", "n_buckets=16", "_SUCCESS"))
-    c = _triples(spark, crash)
-    assert c.count() == a.count()
-    assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
 
 
 def test_non_divisible_bucket_groups_cover_all_buckets(spark, env, tmp_path_factory):
@@ -311,30 +251,12 @@ def test_resume_with_different_n_buckets_refuses(spark, env, tmp_path_factory):
     assert r["groups_processed"] == 0
 
 
-def test_lineage_without_n_buckets_column_is_accepted(spark, tmp_path):
+def test_lineage_without_n_buckets_refuses(spark, tmp_path):
     """Lineage written before the n_buckets column existed reads as
-    null there and resumes under any count."""
+    null there: its bucket ids hash an unknown split, so a resume under
+    any count refuses, naming the null, instead of skipping those
+    buckets."""
     spark.createDataFrame([(0,), (3,)], "bucket long") \
         .write.parquet(str(tmp_path / "lineage"))
-    assert completed_buckets(spark, str(tmp_path), 16) == [0, 3]
-
-
-def test_staging_is_keyed_by_n_buckets(spark, env, tmp_path_factory, monkeypatch):
-    """A completed staging table bucketed under another n_buckets (a
-    run killed after staging, before its first lineage commit) must
-    not be reused: its bucket column hashes a different split, and
-    reusing it miscounts every page in the lineage."""
-    pages, dims = env
-    out_dir = str(tmp_path_factory.mktemp("restage"))
-    _kill_on_call(monkeypatch, "build_kg", 1)
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        run_with_checkpoint(spark, pages, demo_config(), dims, out_dir,
-                            n_buckets=8, bucket_groups=4, stage_input=True)
-    monkeypatch.undo()
-    assert os.path.exists(os.path.join(out_dir, "_staged_pages", "n_buckets=8", "_SUCCESS"))
-
-    r = run_with_checkpoint(spark, pages, demo_config(), dims, out_dir,
-                            n_buckets=16, bucket_groups=4, stage_input=True)
-    assert r["buckets_done"] == 16
-    lin = spark.read.parquet(f"{out_dir}/lineage")
-    assert lin.agg(F.sum("n_pages")).first()[0] == N
+    with pytest.raises(ValueError, match=r"null n_buckets.*n_buckets=16\b"):
+        completed_buckets(spark, str(tmp_path), 16)

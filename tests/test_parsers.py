@@ -1,5 +1,7 @@
 """Unit tests for the pure parsing/coercion functions (SURVEY.md §5.3)."""
 
+import pytest
+
 from pywdcollections_spark.functions.coerce import (
     clean_category_title,
     find_wikilink_mentions,
@@ -221,3 +223,29 @@ def test_flexible_date_batch_model(spark):
     for i, c in enumerate(cases):
         exp_ts, exp_p = model(c)
         assert got[i] == (exp_ts, exp_p), f"{c!r}: {got[i]} != {(exp_ts, exp_p)}"
+
+
+#: every code point Python's str.strip() removes (29 of them)
+PY_SPACES = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+
+
+@pytest.fixture(scope="module")
+def trimmed(spark):
+    """python_trim over per-code-point inputs, one Spark job for all:
+    {(code point, input): output}."""
+    from pyspark.sql import functions as F
+    from pywdcollections_spark.functions.udfs import python_trim
+
+    cases = [(ch, v) for ch in PY_SPACES
+             for v in (f"{ch}abc{ch}", f"{ch}{ch} a{ch}b \t{ch}", ch,
+                       f"\u200b{ch}")]   # U+200B is not whitespace
+    df = spark.createDataFrame(cases, "ch string, v string")
+    return {(r["ch"], r["v"]): r["t"]
+            for r in df.select("ch", "v", python_trim(F.col("v")).alias("t")).collect()}
+
+
+@pytest.mark.parametrize("ch", PY_SPACES, ids=lambda ch: f"U+{ord(ch):04X}")
+def test_python_trim_matches_str_strip(trimmed, ch):
+    got = {v: t for (c, v), t in trimmed.items() if c == ch}
+    assert len(got) == 4
+    assert got == {v: v.strip() for v in got}

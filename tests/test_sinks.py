@@ -135,42 +135,6 @@ def test_parquet_sink_maintain_compacts_small_files(spark, tmp_path):
     assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
 
 
-def test_partition_pruned_upsert_leaves_untouched_partitions(spark, tmp_path):
-    """A partitioned sink whose partition columns are merge keys merges
-    ONLY the partitions named by the update batch: untouched partition
-    directories keep their files (same inode mtimes), touched ones
-    rewrite, and merge semantics stay last-wins (VERDICT r2 #4)."""
-    import glob
-    import os
-    path = str(tmp_path / "part_tbl")
-    sink = ParquetUpsertSink(spark, path, partition_by=["site"])
-    base = spark.createDataFrame(
-        [("enwiki", "Q1", "a", 1), ("enwiki", "Q2", "b", 1),
-         ("frwiki", "Q3", "c", 1), ("dewiki", "Q4", "d", 1)],
-        "site string, qid string, v string, ts long")
-    sink.upsert(base, keys=["site", "qid"], order_col="ts")
-
-    def part_files(site):
-        return sorted(glob.glob(f"{path}/site={site}/*.parquet"))
-
-    fr_before = [(f, os.path.getmtime(f)) for f in part_files("frwiki")]
-    de_before = [(f, os.path.getmtime(f)) for f in part_files("dewiki")]
-    assert fr_before and de_before
-
-    updates = spark.createDataFrame(
-        [("enwiki", "Q1", "a2", 2),          # newer -> replaces
-         ("enwiki", "Q9", "new", 1)],        # insert into touched partition
-        "site string, qid string, v string, ts long")
-    sink.upsert(updates, keys=["site", "qid"], order_col="ts")
-
-    # untouched partitions: identical file lists AND mtimes (never rewritten)
-    assert [(f, os.path.getmtime(f)) for f in part_files("frwiki")] == fr_before
-    assert [(f, os.path.getmtime(f)) for f in part_files("dewiki")] == de_before
-
-    got = {r["qid"]: r["v"] for r in sink.read().collect()}
-    assert got == {"Q1": "a2", "Q2": "b", "Q3": "c", "Q4": "d", "Q9": "new"}
-
-
 def test_compact_recovers_from_crashed_swap(spark, tmp_path):
     """A crash between the two swap renames leaves the table only at
     path+'.old'; the next maintain() must restore it before compacting
@@ -245,11 +209,11 @@ def test_compact_preserves_partitioned_layout(spark, tmp_path):
     assert got.select("bucket").distinct().count() == 4
 
 
-def test_pruned_upsert_empty_batch_is_noop(spark, tmp_path):
-    """An empty update batch against a partitioned sink must be a
-    committed no-op, not a reduce-over-empty crash (ADVICE r3)."""
+def test_upsert_empty_batch_is_noop(spark, tmp_path):
+    """An empty update batch must be a committed no-op: the table keeps
+    exactly its rows (ADVICE r3)."""
     path = str(tmp_path / "empty_batch")
-    sink = ParquetUpsertSink(spark, path, partition_by=["site"])
+    sink = ParquetUpsertSink(spark, path)
     base = spark.createDataFrame(
         [("enwiki", "Q1", "a", 1)], "site string, qid string, v string, ts long")
     sink.upsert(base, keys=["site", "qid"], order_col="ts")
@@ -257,37 +221,6 @@ def test_pruned_upsert_empty_batch_is_noop(spark, tmp_path):
     sink.upsert(empty, keys=["site", "qid"], order_col="ts")
     got = [r.asDict() for r in sink.read().collect()]
     assert got == [{"site": "enwiki", "qid": "Q1", "v": "a", "ts": 1}]
-
-
-def test_pruned_upsert_caps_literal_predicate(spark, tmp_path):
-    """Past max_literal_partitions touched partitions the pruned path
-    falls back to the full merge (VERDICT r3 #5: a 10^4-term OR-chain
-    costs more in Catalyst analysis than the pruning saves) — results
-    stay last-wins either side of the boundary."""
-    path = str(tmp_path / "cap_tbl")
-    sink = ParquetUpsertSink(spark, path, partition_by=["site"])
-    sink.max_literal_partitions = 3      # boundary small enough to test
-    base = spark.createDataFrame(
-        [(f"s{i}", f"Q{i}", "old", 1) for i in range(6)],
-        "site string, qid string, v string, ts long")
-    sink.upsert(base, keys=["site", "qid"], order_col="ts")
-
-    # over the cap (4 partitions > 3): full-merge fallback
-    over = spark.createDataFrame(
-        [(f"s{i}", f"Q{i}", "new", 2) for i in range(4)],
-        "site string, qid string, v string, ts long")
-    sink.upsert(over, keys=["site", "qid"], order_col="ts")
-    got = {r["site"]: r["v"] for r in sink.read().collect()}
-    assert got == {f"s{i}": ("new" if i < 4 else "old") for i in range(6)}
-
-    # at the cap (3 partitions): pruned path still runs
-    at = spark.createDataFrame(
-        [(f"s{i}", f"Q{i}", "newer", 3) for i in range(3)],
-        "site string, qid string, v string, ts long")
-    sink.upsert(at, keys=["site", "qid"], order_col="ts")
-    got = {r["site"]: r["v"] for r in sink.read().collect()}
-    assert got == {"s0": "newer", "s1": "newer", "s2": "newer",
-                   "s3": "new", "s4": "old", "s5": "old"}
 
 
 def test_unreadable_existing_table_raises_and_is_not_rewritten(spark, tmp_path):

@@ -185,3 +185,37 @@ def test_redirect_dim_with_duplicate_targets_does_not_fan_out(spark):
     by_pred = {r["pred"]: r for r in out}
     assert by_pred["P373"].obj_norm == "A target"   # min(to_title), exists
     assert by_pred["P18"].obj_norm == "a.jpg"
+
+
+def test_whitespace_edged_titles_match_the_oracle(spark):
+    """Positional params reach validate unstripped. The image and P373
+    title cleanups must strip like the reference's str.strip(), so a
+    tab-edged image title and a U+3000/U+00A0-edged category resolve to
+    the same titles, and the same verdicts, as the golden oracle's."""
+    from pywdcollections_spark.operators.linking import target_classes
+    from pywdcollections_spark.operators.validate import dispatch_table, validate
+    from pywdcollections_spark.testkit.validate_golden import category_title, image_title
+
+    img, cat = "\tpic.jpg", "\u3000Some cat\xa0"
+    files, cats = {"pic.jpg"}, {"Some cat"}
+    # the oracle's verdicts: the stripped titles exist, so both are valid
+    assert image_title(img) in files and category_title(cat) in cats
+
+    staged = spark.createDataFrame(
+        [("Q1", "P18", img, "string", "enwiki", "u1", "2024-01-01"),
+         ("Q1", "P373", cat, "string", "enwiki", "u1", "2024-01-01")],
+        "subj string, pred string, obj_raw string, datatype string, "
+        "source string, url string, warc_ts string")
+    seed = spark.createDataFrame([("Q1", None)], "qid string, P17 string")
+    redirects = spark.createDataFrame([], "from_title string, to_title string")
+    out = validate(staged, dispatch_table(spark), seed,
+                   spark.createDataFrame([], "qid string"),
+                   target_classes(spark.createDataFrame([], "qid string, p31 long"),
+                                  spark.createDataFrame([], "class_qid long, super_qid long")),
+                   spark.createDataFrame([(t,) for t in cats], "title string"),
+                   commons_redirects=redirects,
+                   commons_files=spark.createDataFrame([(t,) for t in files], "title string"),
+                   file_redirects=redirects).collect()
+    got = {r["pred"]: (r["valid"], r["obj_norm"], r["reject_reason"]) for r in out}
+    assert got == {"P18": (True, image_title(img), None),
+                   "P373": (True, category_title(cat), None)}
